@@ -115,7 +115,7 @@ object DedupIndex {
 
   private def dirMtime(spark: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = AtomicStore.fs(spark, dir)
     try fs.getFileStatus(p).getModificationTime catch { case _: Exception => -1L }
   }
 
@@ -165,7 +165,7 @@ object DedupIndex {
       // fold drops the dead rows AND the tombstones), so only the new
       // rows serve — the [[graft.sim.Similarity.appendToIvfPqIndex]]
       // contract on the dedup store
-      if (tombstonesOpt(spark, dir).exists(tb =>
+      if (AtomicStore.tombstonesOpt(spark, dir).exists(tb =>
             !tb.join(df.select(col(idCol).as("id")).distinct(),
               Seq("id"), "left_semi").isEmpty)) {
         compact(spark, path)
@@ -210,20 +210,6 @@ object DedupIndex {
       invalidateCaches(path)
     }
 
-  /** Tombstoned ids of one generation, if any [[delete]] happened in it.
-    * Probed for committed DATA FILES, not bare existence: a delete
-    * killed mid-write leaves a dir holding only `_temporary/`, which
-    * must read as "no tombstones", not brick every later query/append/
-    * compact on failed schema inference.
-    */
-  private def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (AtomicStore.hasDataFile(fs, p))
-      Some(spark.read.parquet(p.toString).distinct())
-    else None
-  }
-
   private val StreamTagRe = "^b([0-9]+)$".r
 
   /** Folded-tags ledger of one generation: (explicit tags, numbered-tag
@@ -235,14 +221,10 @@ object DedupIndex {
     */
   private def foldedState(spark: SparkSession, dir: String): (Set[String], Long) = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_folded_tags")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = AtomicStore.fs(spark, dir)
     if (!fs.exists(p)) (Set.empty, -1L)
     else {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try { in.readFully(0, buf) } finally in.close()
-      val lines = new String(buf, "UTF-8").split("\n")
+      val lines = AtomicStore.readSmallFile(fs, p).split("\n")
         .map(_.trim).filter(_.nonEmpty).toSet
       val hw = lines.collect { case s if s.startsWith("b<=") =>
         scala.util.Try(s.drop(3).toLong).getOrElse(-1L) }
@@ -319,8 +301,7 @@ object DedupIndex {
     import spark.implicits._
     val dir = AtomicStore.resolve(spark, path)
     val p = paramsIn(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = AtomicStore.fs(spark, dir)
     def subdirs(t: String): Set[String] = {
       val tp = new org.apache.hadoop.fs.Path(s"$dir/$t")
       if (fs.exists(tp)) fs.listStatus(tp).filter(_.isDirectory)
@@ -364,7 +345,7 @@ object DedupIndex {
         "unrecorded, so an at-least-once replay can cleanly rewrite both " +
         "tables.")
     if (complete.isEmpty) return
-    val tomb = tombstonesOpt(spark, dir)
+    val tomb = AtomicStore.tombstonesOpt(spark, dir)
     def foldRows(table: String): DataFrame = {
       val rows = spark.read.parquet(complete.map(t => s"$dir/$table/$t"): _*)
       // the fold IS the delete's reclamation: tombstoned ids' rows are
@@ -391,10 +372,8 @@ object DedupIndex {
     Seq((p.n, p.numHashes, p.bands, p.seed))
       .toDF("n", "num_hashes", "bands", "seed")
       .write.mode("overwrite").parquet(s"$gdir/meta")
-    val ftOut = fs.create(
-      new org.apache.hadoop.fs.Path(s"$gdir/_folded_tags"), true)
-    try ftOut.write(ledger.getBytes("UTF-8"))
-    finally ftOut.close()
+    AtomicStore.writeSmallFile(fs,
+      new org.apache.hadoop.fs.Path(s"$gdir/_folded_tags"), ledger)
     AtomicStore.failpoint("dedup:grams")
     grams.write.mode("overwrite").parquet(s"$gdir/grams/base")
     AtomicStore.failpoint("dedup:bands")
@@ -465,7 +444,7 @@ object DedupIndex {
     val storeBytes = cachedByMtime(
       storeSizeCache, dir, dirMtime(spark, s"$dir/bands")) {
         val bp = new org.apache.hadoop.fs.Path(s"$dir/bands")
-        val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = AtomicStore.fs(spark, dir)
         try fs.getContentSummary(bp).getLength catch { case _: Exception => 0L }
       }
     val ixBands0 = readStore(spark, s"$dir/bands")
@@ -494,7 +473,7 @@ object DedupIndex {
     // candidate set is anti-joined against the tombstones (small —
     // compaction keeps them bounded), their physical postings stay until
     // the next [[compact]]
-    val cands = tombstonesOpt(spark, dir).fold(cands1)(tb =>
+    val cands = AtomicStore.tombstonesOpt(spark, dir).fold(cands1)(tb =>
       cands1.join(broadcast(tb.select(col("id").as("index_id"))),
         Seq("index_id"), "left_anti"))
     val ixGrams = readStore(spark, s"$dir/grams")

@@ -743,7 +743,7 @@ object Similarity {
     * the compute dial at once, which is what a billion-vector corpus
     * needs. Codes quantize raw vectors by default — simpler, and the
     * recall dial is `nprobe` and `m` as usual; pass `residual = true`
-    * for FAISS-style residual codes ([[ivfPqResidual]]) when the extra
+    * for FAISS-style residual codes ([[fitIvfPq]]) when the extra
     * per-cell precision is worth a second pass over the corpus at build
     * time (assign, then encode the residual).
     *
@@ -771,34 +771,73 @@ object Similarity {
       coarseSampleFraction: Option[Double] = None,
       residual: Boolean = false
   ): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val sub = dim / m
-    if (residual)
-      return ivfPqResidual(df, idCol, vecCol, k, dim, nlist, nprobe, m,
-        codebookSize, seed, queries, codebooks, coarseSampleFraction)
-    val books = codebooks.getOrElse(pqCodebooks(df, vecCol, dim, m, codebookSize, seed))
-    require(books.size == m && books.head.head.size == sub,
-      s"codebooks shape ${books.size}×${books.head.size}×${books.head.head.size} " +
-        s"does not match m=$m, dim/m=$sub")
-    val v = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-    // coarse quantizer trained distributed over the full corpus (matching
-    // [[ivfTopK]]) or a seeded fraction of it — the engine's own
-    // deterministic Lloyd's fit (one aggregation pass per iteration, no
-    // row ever collected beyond the nlist seeds), so the entire IVF-PQ
-    // pipeline is replayable by the SQL oracle
-    val fitInput = coarseSampleFraction
-      .map(f => v.sample(withReplacement = false, f, seed)).getOrElse(v)
-    val cents = pqCodebooks(fitInput, "v", dim, m = 1, codebookSize = nlist,
-      seed = seed, normalizeInput = false).head
-    // corpus side: one cell id + m-byte code vector per row — the only
-    // thing the candidate scan ever reads; assignment is the fused
-    // codegen argmin
-    val assigned = v.select(col(idCol).as("cid"),
-      pqEncode(col("v"), books).as("codes"),
-      graft.plans.Expressions.nearest_centroid(col("v"), cents).as("cell"))
-    scoreAssignedCells(assigned, cents, books, residual = false,
-      queries.getOrElse(df), idCol, vecCol, k, nprobe, m, sub)
+    val (cents, books) = fitIvfPq(df, idCol, vecCol, dim, nlist, m,
+      codebookSize, seed, residual, coarseSampleFraction, codebooks)
+    scoreAssignedCells(encodeWith(df, idCol, vecCol, cents, books, residual),
+      cents, books, residual, queries.getOrElse(df), idCol, vecCol, k,
+      nprobe, m, dim / m)
   }
+
+  /** The IVF-PQ model fit shared by the direct path ([[ivfPqTopK]]) and
+    * the persisted index ([[writeIvfPqIndex]]): the coarse quantizer is
+    * trained distributed over the full corpus (matching [[ivfTopK]]) or a
+    * seeded fraction of it — the engine's own deterministic Lloyd's fit
+    * (one aggregation pass per iteration, no row ever collected beyond
+    * the nlist seeds), so the entire IVF-PQ pipeline is replayable by the
+    * SQL oracle — and the PQ codebooks (unless the caller supplies them)
+    * on the raw vectors or, with `residual`, on the residuals.
+    *
+    * FAISS-style RESIDUAL IVF-PQ: codes quantize `r = u − centroid(cell)`
+    * instead of the raw vector, so the codebooks only have to cover the
+    * within-cell spread — the classic precision win over raw-vector
+    * codes. Scoring uses `⟨q,u⟩ ≈ ⟨q,cent⟩ + ⟨q,r̂⟩`: the first term is
+    * one dot per probed (query, cell) — computed in the probe join, which
+    * already pairs them — and the second is the SAME per-query subspace
+    * LUTs as the raw path (`lut[j][c] = ⟨q_j, book_j[c]⟩` is
+    * centroid-independent because r̂ decomposes per subspace), so the
+    * per-candidate cost is still m lookups + m adds, plus one add for the
+    * centroid term. Everything runs on L2-normalized vectors end-to-end;
+    * residuals are NOT re-normalized (that would break the decomposition).
+    */
+  private def fitIvfPq(
+      df: DataFrame, idCol: String, vecCol: String, dim: Int, nlist: Int,
+      m: Int, codebookSize: Int, seed: Long, residual: Boolean,
+      coarseSampleFraction: Option[Double],
+      codebooks: Option[Seq[Seq[Seq[Double]]]]
+  ): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
+    require(dim % m == 0, s"dim $dim not divisible by m $m")
+    def coarse(in: DataFrame, c: String): Seq[Seq[Double]] = pqCodebooks(
+      coarseSampleFraction
+        .map(f => in.sample(withReplacement = false, f, seed)).getOrElse(in),
+      c, dim, m = 1, codebookSize = nlist, seed = seed,
+      normalizeInput = false).head
+    val (cents, books) =
+      if (!residual) {
+        val books = codebooks.getOrElse(
+          pqCodebooks(df, vecCol, dim, m, codebookSize, seed))
+        (coarse(df.select(col(idCol), asDouble(col(vecCol)).as("v")), "v"), books)
+      } else {
+        val cents = coarse(
+          df.select(col(idCol), l2normalize(asDouble(col(vecCol))).as("u0")), "u0")
+        (cents, codebooks.getOrElse(pqCodebooks(residuals(df, idCol, vecCol, cents),
+          "res", dim, m, codebookSize, seed, normalizeInput = false)))
+      }
+    require(books.size == m && books.head.head.size == dim / m,
+      s"codebooks shape ${books.size}×${books.head.size}×${books.head.head.size} " +
+        s"does not match m=$m, dim/m=${dim / m}")
+    (cents, books)
+  }
+
+  /** `df` L2-normalized (`u0`), assigned to its nearest centroid (`cell`)
+    * and reduced to the residual `res = u0 − centroid(cell)`.
+    */
+  private def residuals(df: DataFrame, idCol: String, vecCol: String,
+                        cents: Seq[Seq[Double]]): DataFrame =
+    df.select(col(idCol), l2normalize(asDouble(col(vecCol))).as("u0"))
+      .withColumn("cell",
+        graft.plans.Expressions.nearest_centroid(col("u0"), cents))
+      .withColumn("res", zip_with(col("u0"),
+        element_at(typedLit(cents), col("cell") + 1), (a, b) => a - b))
 
   /** The SERVE half of IVF-PQ, shared by the direct paths and the
     * persisted-index path ([[ivfPqServe]]): given the corpus reduced to
@@ -858,55 +897,20 @@ object Similarity {
         col("score"), col("rank"))
   }
 
-  /** FAISS-style RESIDUAL IVF-PQ (`ivfPqTopK(residual = true)`): codes
-    * quantize `r = u − centroid(cell)` instead of the raw vector, so the
-    * codebooks only have to cover the within-cell spread — the classic
-    * precision win over raw-vector codes. Scoring uses
-    * `⟨q,u⟩ ≈ ⟨q,cent⟩ + ⟨q,r̂⟩`: the first term is one dot per probed
-    * (query, cell) — computed in the probe join, which already pairs them —
-    * and the second is the SAME per-query subspace LUTs as the raw path
-    * (`lut[j][c] = ⟨q_j, book_j[c]⟩` is centroid-independent because r̂
-    * decomposes per subspace), so the per-candidate cost is still m lookups
-    * + m adds, plus one add for the centroid term. Everything runs on
-    * L2-normalized vectors end-to-end; residuals are NOT re-normalized
-    * (that would break the decomposition).
-    */
-  private def ivfPqResidual(
-      df: DataFrame, idCol: String, vecCol: String, k: Int, dim: Int,
-      nlist: Int, nprobe: Int, m: Int, codebookSize: Int, seed: Long,
-      queries: Option[DataFrame], codebooks: Option[Seq[Seq[Seq[Double]]]],
-      coarseSampleFraction: Option[Double]): DataFrame = {
-    val sub = dim / m
-    val un = df.select(col(idCol), l2normalize(asDouble(col(vecCol))).as("u0"))
-    val fitInput = coarseSampleFraction
-      .map(f => un.sample(withReplacement = false, f, seed)).getOrElse(un)
-    val cents = pqCodebooks(fitInput, "u0", dim, m = 1, codebookSize = nlist,
-      seed = seed, normalizeInput = false).head
-    val centsLit = typedLit(cents)
-    val resid = un
-      .withColumn("cell", graft.plans.Expressions.nearest_centroid(col("u0"), cents))
-      .withColumn("res",
-        zip_with(col("u0"), element_at(centsLit, col("cell") + 1), (a, b) => a - b))
-    val books = codebooks.getOrElse(pqCodebooks(resid, "res", dim, m,
-      codebookSize, seed, normalizeInput = false))
-    require(books.size == m && books.head.head.size == sub,
-      s"codebooks shape ${books.size}×${books.head.size}×${books.head.head.size} " +
-        s"does not match m=$m, dim/m=$sub")
-    val assigned = resid.select(col(idCol).as("cid"),
-      graft.plans.Expressions.pq_encode(col("res"), books, normalize = false).as("codes"),
-      col("cell"))
-    scoreAssignedCells(assigned, cents, books, residual = true,
-      queries.getOrElse(df), idCol, vecCol, k, nprobe, m, sub)
-  }
-
-  // ---- Persisted IVF-PQ index: fit once, serve many. At 100 TB the
-  // expensive steps are the codebook fit and the full-corpus encode; an
+  // ---- Persisted ANN indexes: fit once, serve many. At 100 TB the
+  // expensive steps are the model fit and the full-corpus encode; an
   // index that stores their output — a small driver-side model plus a
-  // (cell, cid, codes) table — lets every later query batch skip straight
+  // (cell, id, codes) table — lets every later query batch skip straight
   // to the candidate join. The codes table is PARTITIONED BY cell, so a
   // serve that probes nprobe cells reads only those directories (dynamic
   // partition pruning through the broadcast probe join); the corpus
   // vectors themselves are never stored or read again.
+  //
+  // Two stores share ONE lifecycle (append, delete, compact, stream
+  // append, fold, refit, open — below the entry points): IVF-PQ and the
+  // int8 SQ×IVF tier. An [[AnnCodec]] supplies only what differs between
+  // them; the fits stay separate because the model fits really differ,
+  // and both end in the shared [[publish]].
 
   /** An opened on-disk IVF-PQ index: the small model (centroids m×dim +
     * codebooks m×k×sub, a few KB — driver-held by design, like the
@@ -919,6 +923,75 @@ object Similarity {
       m: Int,
       residual: Boolean,
       codes: DataFrame)
+
+  /** An opened on-disk SQ×IVF index: the coarse centroids (nlist × dim
+    * doubles, driver-held like the literals the direct path inlines) and
+    * the lazy cell-partitioned `(id, c8)` codes table. SQ needs no
+    * codebooks: its scale is the fixed constant 1/127.
+    */
+  case class SqIvfIndex(cents: Seq[Seq[Double]], dim: Int, codes: DataFrame)
+
+  /** What differs between the persisted ANN stores; the lifecycle that
+    * keeps a store alive is shared and parameterised by this. `I` is the
+    * opened index.
+    *
+    * @param prefix      failpoint label prefix of the store's writes
+    * @param idCol       id column of its codes and tombstones tables
+    * @param modelTables tables a fold copies verbatim into the new
+    *                    generation (the model and any fit-time snapshot)
+    */
+  private sealed abstract class AnnCodec[I](val prefix: String,
+      val idCol: String, val modelTables: Seq[String]) {
+    /** Collect generation `dir`'s stored model to the driver; the result
+      * pairs it with a live codes view into an opened index. Every read
+      * happens here, once per cached generation: the returned function
+      * runs on each open and must touch no storage.
+      */
+    def loadModel(spark: SparkSession, dir: String): DataFrame => I
+    /** Encode `df` with an opened index's stored model (no refit). */
+    def encode(index: I, df: DataFrame, idCol: String, vecCol: String): DataFrame
+    /** The staleness number a refit compares with its threshold. */
+    def staleness(spark: SparkSession, path: String): Double
+
+    protected def centroids(spark: SparkSession, dir: String): Seq[Seq[Double]] =
+      spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
+        .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
+  }
+
+  private object PqCodec extends AnnCodec[IvfPqIndex]("ivfpq", "cid",
+      Seq("meta", "centroids", "codebooks", "cellstats")) {
+    def loadModel(spark: SparkSession, dir: String): DataFrame => IvfPqIndex = {
+      val meta = spark.read.parquet(s"$dir/meta").head()
+      val m = meta.getAs[Int]("m")
+      val cents = centroids(spark, dir)
+      val booksFlat = spark.read.parquet(s"$dir/codebooks")
+        .orderBy("j", "c").collect()
+        .map(r => (r.getAs[Int]("j"), r.getSeq[Double](r.fieldIndex("vec"))))
+      val books = (0 until m).map(j =>
+        booksFlat.filter(_._1 == j).map(_._2).toSeq).toSeq
+      val (dim, residual) = (meta.getAs[Int]("dim"), meta.getAs[Boolean]("residual"))
+      codes => IvfPqIndex(cents, books, dim, m, residual, codes)
+    }
+    def encode(index: IvfPqIndex, df: DataFrame, idCol: String,
+               vecCol: String): DataFrame =
+      encodeForIndex(index, df, idCol, vecCol)
+    def staleness(spark: SparkSession, path: String): Double =
+      ivfPqCellDrift(spark, path).agg(max(abs(col("growth")))).head().getDouble(0)
+  }
+
+  private object SqCodec extends AnnCodec[SqIvfIndex]("sqivf", "id",
+      Seq("meta", "centroids")) {
+    def loadModel(spark: SparkSession, dir: String): DataFrame => SqIvfIndex = {
+      val dim = spark.read.parquet(s"$dir/meta").head().getAs[Int]("dim")
+      val cents = centroids(spark, dir)
+      codes => SqIvfIndex(cents, dim, codes)
+    }
+    def encode(index: SqIvfIndex, df: DataFrame, idCol: String,
+               vecCol: String): DataFrame =
+      sqIvfEncode(df, idCol, vecCol, index.cents)
+    def staleness(spark: SparkSession, path: String): Double =
+      sqIvfStreamGrowth(spark, path)
+  }
 
   /** Fit an IVF-PQ index on `df` and persist it under `path`, as one
     * crash-atomically committed generation ([[graft.util.AtomicStore]]):
@@ -944,35 +1017,10 @@ object Similarity {
       coarseSampleFraction: Option[Double] = None,
       streamHighwater: Option[Long] = None
   ): Unit = {
-    require(dim % m == 0, s"dim $dim not divisible by m $m")
     val spark = df.sparkSession
     import spark.implicits._
-    val (cents, books) =
-      if (!residual) {
-        val books = pqCodebooks(df, vecCol, dim, m, codebookSize, seed)
-        val v = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-        val cents = pqCodebooks(
-          coarseSampleFraction
-            .map(f => v.sample(withReplacement = false, f, seed)).getOrElse(v),
-          "v", dim, m = 1, codebookSize = nlist, seed = seed,
-          normalizeInput = false).head
-        (cents, books)
-      } else {
-        val un = df.select(col(idCol), l2normalize(asDouble(col(vecCol))).as("u0"))
-        val cents = pqCodebooks(
-          coarseSampleFraction
-            .map(f => un.sample(withReplacement = false, f, seed)).getOrElse(un),
-          "u0", dim, m = 1, codebookSize = nlist, seed = seed,
-          normalizeInput = false).head
-        val resid = un
-          .withColumn("cell",
-            graft.plans.Expressions.nearest_centroid(col("u0"), cents))
-          .withColumn("res", zip_with(col("u0"),
-            element_at(typedLit(cents), col("cell") + 1), (a, b) => a - b))
-        val books = pqCodebooks(resid, "res", dim, m, codebookSize, seed,
-          normalizeInput = false)
-        (cents, books)
-      }
+    val (cents, books) = fitIvfPq(df, idCol, vecCol, dim, nlist, m,
+      codebookSize, seed, residual, coarseSampleFraction, codebooks = None)
     // the SAME encode expressions the serve-time grow path uses
     // ([[encodeWith]] — single-sourced, so fit and append can never
     // drift apart and break the pinned fit/append bit-equivalence)
@@ -997,23 +1045,15 @@ object Similarity {
       bj.zipWithIndex.map { case (cv, c) => (j, c, cv) }
     }.toDF("j", "c", "vec")
       .write.mode("overwrite").parquet(s"$gdir/codebooks")
-    AtomicStore.failpoint("ivfpq:codes")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    AtomicStore.failpoint("ivfpq:cellstats")
-    // fit-time cell occupancy snapshot — the baseline the staleness
-    // signal compares against ([[ivfPqCellDrift]]); derived from the
-    // stored codes so it reflects exactly what the index holds
-    spark.read.parquet(s"$gdir/codes").groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_fit"))
-      .write.mode("overwrite").parquet(s"$gdir/cellstats")
-    // stream-maintained indexes ([[appendStreamBatch]]) record the last
-    // FOLDED micro-batch id INSIDE the generation, before the commit —
-    // atomic with the fit, so an at-least-once replay of that batch can
-    // never double-apply it (the append guard reads this watermark)
-    writeStreamHighwater(spark, gdir, streamHighwater)
-    AtomicStore.commit(spark, path, gen)
-    // the model under `path` just changed — drop any cached open
-    invalidateIndexModel(path)
+    publish(PqCodec, spark, path, gen, gdir, assigned, streamHighwater) {
+      AtomicStore.failpoint("ivfpq:cellstats")
+      // fit-time cell occupancy snapshot — the baseline the staleness
+      // signal compares against ([[ivfPqCellDrift]]); derived from the
+      // stored codes so it reflects exactly what the index holds
+      spark.read.parquet(s"$gdir/codes").groupBy(col("cell"))
+        .agg(count(lit(1)).as("n_fit"))
+        .write.mode("overwrite").parquet(s"$gdir/cellstats")
+    }
   }
 
   /** Encode vectors with an OPENED index's stored model — the exact
@@ -1026,9 +1066,11 @@ object Similarity {
                      idCol: String, vecCol: String): DataFrame =
     encodeWith(df, idCol, vecCol, index.cents, index.books, index.residual)
 
-  /** The ONE (cell, codes) construction both the fit ([[writeIvfPqIndex]])
-    * and the grow path ([[encodeForIndex]]) use — single-sourced so the
-    * two can never drift apart.
+  /** The ONE (cell, codes) construction the direct path ([[ivfPqTopK]]),
+    * the fit ([[writeIvfPqIndex]]) and the grow path ([[encodeForIndex]])
+    * use — single-sourced so they can never drift apart. Corpus side: one
+    * cell id + m-byte code vector per row — the only thing the candidate
+    * scan ever reads; assignment is the fused codegen argmin.
     */
   private def encodeWith(df: DataFrame, idCol: String, vecCol: String,
                          cents: Seq[Seq[Double]],
@@ -1040,11 +1082,7 @@ object Similarity {
           pqEncode(col("v"), books).as("codes"),
           graft.plans.Expressions.nearest_centroid(col("v"), cents).as("cell"))
     } else {
-      df.select(col(idCol), l2normalize(asDouble(col(vecCol))).as("u0"))
-        .withColumn("cell",
-          graft.plans.Expressions.nearest_centroid(col("u0"), cents))
-        .withColumn("res", zip_with(col("u0"),
-          element_at(typedLit(cents), col("cell") + 1), (a, b) => a - b))
+      residuals(df, idCol, vecCol, cents)
         .select(col(idCol).as("cid"),
           graft.plans.Expressions.pq_encode(col("res"), books,
             normalize = false).as("codes"),
@@ -1069,24 +1107,8 @@ object Similarity {
     * is an upsert, never stale emptiness or a dead-row resurrection.
     */
   def appendToIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-                         path: String): Unit = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path, owner = "appendToIvfPqIndex") {
-      // resolve the committed generation ONCE; every sub-step of the append
-      // works inside it (single-writer store, now lease-enforced). A
-      // crashed append is invisible: parquet appends stage in `_temporary/`,
-      // which readers ignore.
-      val dir = AtomicStore.resolve(spark, path)
-      val ids = df.select(col(idCol).as("cid")).distinct()
-      // fast path: no tombstones, or none colliding — just a semi-join probe
-      if (tombstonesOpt(spark, dir)
-            .exists(t => !t.join(ids, Seq("cid"), "left_semi").isEmpty))
-        compactIn(spark, dir)
-      val index = openIvfPqIndexIn(spark, dir)
-      encodeForIndex(index, df, idCol, vecCol)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    }
-  }
+                         path: String): Unit =
+    append(PqCodec, df, idCol, vecCol, path, owner = "appendToIvfPqIndex")
 
   /** Delete vectors from a persisted index by id: appends the ids to a
     * `tombstones` table — no codes rewrite, so a delete is as cheap as a
@@ -1111,126 +1133,7 @@ object Similarity {
     * instead of corrupting — retry between batches.
     */
   def deleteFromIvfPqIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    AtomicStore.withMutationLease(ids.sparkSession, path,
-        owner = "deleteFromIvfPqIndex") {
-      ids.select(col(idCol).as("cid")).distinct()
-        .write.mode("append").parquet(
-          s"${AtomicStore.resolve(ids.sparkSession, path)}/tombstones")
-    }
-
-  /** Tombstones table of one generation directory if any delete has
-    * happened in it, else None.
-    */
-  private def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // data-file probe, not bare exists: a delete killed mid-write leaves
-    // a tombstones dir holding only _temporary/, which would fail schema
-    // inference and brick every later open/serve/compact on the store
-    if (AtomicStore.hasDataFile(fs, p))
-      Some(spark.read.parquet(p.toString).distinct())
-    else None
-  }
-
-  /** Schema-robust read of a `codes_stream` extension table: an EXPLICIT
-    * schema (the base codes schema + the `batch_id` partition column),
-    * so a directory holding no committed parquet files — every row
-    * tombstone-compacted away, or a crashed FIRST append's lone
-    * `_temporary/` — reads as an empty frame instead of failing schema
-    * inference and bricking every open/serve on the store.
-    */
-  private def readStreamExt(spark: SparkSession, extPath: String,
-      baseSchema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType(
-        baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "batch_id", org.apache.spark.sql.types.LongType)))
-      .parquet(extPath)
-
-  /** The live view of the codes table: stored codes minus tombstoned ids.
-    * The anti-join broadcasts while the tombstone set is small (the
-    * normal regime — compaction keeps it from growing unboundedly) and
-    * degrades to a shuffled anti-join, never a scan-per-id, beyond that.
-    */
-  private def liveCodes(spark: SparkSession, dir: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-    val base = reader.parquet(s"$dir/codes")
-    // stream-grown extension ([[appendStreamBatch]]): same (cid, codes,
-    // cell) rows, additionally partitioned by batch_id for idempotent
-    // replay — union preserves cell partition pruning on both sides
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val codes =
-      if (extP.getFileSystem(spark.sessionState.newHadoopConf()).exists(extP))
-        base.unionByName(readStreamExt(spark, extP.toString, base.schema)
-          .select(base.columns.toIndexedSeq.map(col): _*))
-      else base
-    tombstonesOpt(spark, dir)
-      .map(t => codes.join(t, Seq("cid"), "left_anti")).getOrElse(codes)
-  }
-
-  /** Mark a stream micro-batch's extension write as fully JOB-COMMITTED:
-    * an empty `_complete_b<N>` file at the extension root, created only
-    * AFTER the batch's parquet job commits (and re-created by an
-    * at-least-once replay's rewrite). The extension folds read these as
-    * the completion boundary: a kill inside the parquet job — including
-    * inside the committer's file-move loop, which leaves PARTIAL data
-    * files — leaves no sentinel, so a fold that runs before the stream
-    * restarts must neither merge that batch's partial rows into base nor
-    * raise the highwater over it (the replay would then be absorbed and
-    * the partial rows would serve forever). Underscore-prefixed, so
-    * Spark's file index and [[streamExtensionDirCount]] both ignore it;
-    * the files live and die with the extension directory.
-    */
-  private def writeBatchSentinel(spark: SparkSession, dir: String,
-                                 batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$dir/codes_stream/_complete_b$batchId")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(p, true).close()
-  }
-
-  /** Batch ids the extension holds completion sentinels for. `None` for
-    * a PRE-SENTINEL (legacy) extension — no `_complete_b*` and no
-    * `_sentinels_enabled` convention marker — which the folds treat as
-    * all-complete (the pre-sentinel behavior). `Some(empty)` is an
-    * extension that follows the convention but holds no complete batch:
-    * a fold that CARRIED a partial batch writes the convention marker
-    * alongside it, so a second fold before the replay arrives cannot
-    * mistake the carried rows for a legacy all-complete extension and
-    * fold them after all.
-    */
-  private def sentineledBatches(spark: SparkSession,
-      extP: org.apache.hadoop.fs.Path): Option[Set[Long]] = {
-    val fs = extP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(extP)) None
-    else {
-      val names = fs.listStatus(extP).iterator
-        .filter(_.isFile).map(_.getPath.getName).toSeq
-      val ids = names.filter(_.startsWith("_complete_b"))
-        .flatMap(n => scala.util.Try(
-          n.drop("_complete_b".length).toLong).toOption)
-        .toSet
-      if (ids.isEmpty && !names.contains("_sentinels_enabled")) None
-      else Some(ids)
-    }
-  }
-
-  /** Last micro-batch id a generation's FIT already folded in — written
-    * by a stream-triggered refit ([[writeIvfPqIndex]]'s `streamHighwater`)
-    * atomically with the generation.
-    */
-  private def streamHighwaterOf(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_stream_highwater")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try { in.readFully(0, buf); Some(new String(buf, "UTF-8").trim.toLong) }
-      finally in.close()
-    }
-  }
+    delete(PqCodec, ids, idCol, path, owner = "deleteFromIvfPqIndex")
 
   /** Streaming-grade append: encode `df` with the stored model (like
     * [[appendToIvfPqIndex]]) into the `codes_stream` extension table,
@@ -1242,16 +1145,284 @@ object Similarity {
     * already folded it into the base fit (the watermark is written
     * atomically with that generation), so replay-after-refit cannot
     * duplicate either. Tombstone collisions compact first, like the
-    * batch append.
+    * batch append. Returns whether the batch was DROPPED by a highwater
+    * gap (see [[skippedStreamBatches]]).
     */
   def appendStreamBatch(df: DataFrame, idCol: String, vecCol: String,
-                        path: String, batchId: Long): Boolean = {
+                        path: String, batchId: Long): Boolean =
+    appendStream(PqCodec, df, idCol, vecCol, path, batchId, "appendStreamBatch")
+
+  /** Fold accumulated tombstones into the codes layout: rewrite ONLY the
+    * cell partitions that actually contain a tombstoned id (dynamic
+    * partition overwrite — untouched cells keep their original files),
+    * then drop the tombstones table. Serving before and after compaction
+    * is bit-identical by construction; compaction just reclaims the dead
+    * rows and re-arms [[deleteFromIvfPqIndex]] for id reuse.
+    *
+    * The affected-cell list collects to the driver — bounded by nlist,
+    * same size class as the centroid table.
+    */
+  def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
+    compact(PqCodec, spark, path, owner = "compactIvfPqIndex")
+
+  /** Fold the stream extension into the base codes table, in a FRESH
+    * generation — the small-file compaction a long-running
+    * [[appendStreamBatch]] ingestion needs: the extension keeps one
+    * `(batch_id, cell)` partition directory per micro-batch × cell (the
+    * price of idempotent replay), so months of micro-batches leave
+    * thousands of tiny files and the serve-time union goes
+    * metadata-bound. No model work is redone: meta, centroids, codebooks
+    * and the fit-time `cellstats` snapshot are copied verbatim (the
+    * drift baseline must stay the FIT's occupancy), tombstones are
+    * folded first ([[compactIn]]), the merged live rows are rewritten
+    * cell-partitioned, and the new generation's stream highwater is
+    * raised to the highest folded batch id — so an at-least-once replay
+    * of any folded batch is absorbed exactly as after a refit. Published
+    * with the same crash-atomic marker commit: a killed compaction
+    * leaves readers on the old generation.
+    *
+    * Serving, drift, and replay semantics are bit-identical before and
+    * after; only the file layout (and the absence of the union branch)
+    * changes. Returns false when there is no extension to fold.
+    */
+  def compactIvfPqStreamExtension(spark: SparkSession, path: String): Boolean =
+    fold(PqCodec, spark, path, owner = "compactIvfPqStreamExtension")
+
+  /** Staleness signal: per-cell LIVE occupancy (appends minus tombstoned
+    * deletes) vs the fit-time snapshot, plus the growth ratio. A cell
+    * whose `growth` is large holds many vectors the coarse quantizer
+    * never saw at fit time; a strongly negative `growth` means the cell
+    * has drained — both directions distort the fit-time balance, so
+    * refit when |growth| passes the deployment's tolerance. Full outer:
+    * a cell that only gained vectors after fit shows `n_fit` 0.
+    */
+  def ivfPqCellDrift(spark: SparkSession, path: String): DataFrame = {
+    val dir = AtomicStore.resolve(spark, path)
+    val fit = spark.read.parquet(s"$dir/cellstats")
+    val now = liveCodes(PqCodec, spark, dir)
+      .groupBy(col("cell")).agg(count(lit(1)).as("n_now"))
+    fit.join(now, Seq("cell"), "full")
+      .select(col("cell"),
+        coalesce(col("n_fit"), lit(0L)).as("n_fit"),
+        coalesce(col("n_now"), lit(0L)).as("n_now"))
+      .withColumn("growth",
+        (col("n_now") - col("n_fit")) / greatest(col("n_fit"), lit(1L)))
+  }
+
+  /** Drift-triggered refit — the last arc of the index lifecycle
+    * (fit → serve → append → delete → compact → drift → REFIT). When the
+    * staleness signal ([[ivfPqCellDrift]]) reports a cell whose |growth|
+    * meets `threshold`, the coarse quantizer and codebooks are refit from
+    * the CURRENT corpus `df` (the index is derived state; the embedding
+    * table is the source of truth — the data-lake shape, not a
+    * reconstruct-from-codes hack) and every cell is rewritten via
+    * [[writeIvfPqIndex]] with the persisted meta params, so a refit index
+    * is bit-identical to one fit fresh on today's corpus with the same
+    * seed. Accumulated tombstones are dropped: the rewrite IS the
+    * compaction. Returns whether a refit happened — below the threshold
+    * the store is untouched (the cheap steady-state probe).
+    */
+  def refitIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
+                      path: String, threshold: Double = 0.5,
+                      streamHighwater: Option[Long] = None): Boolean =
+    refit(PqCodec, df.sparkSession, path, threshold, "refitIvfPqIndex") { meta =>
+      writeIvfPqIndex(df, idCol, vecCol, path,
+        dim = meta.getAs[Int]("dim"),
+        nlist = meta.getAs[Int]("nlist"),
+        m = meta.getAs[Int]("m"),
+        codebookSize = meta.getAs[Int]("codebook_size"),
+        seed = meta.getAs[Long]("seed"),
+        residual = meta.getAs[Boolean]("residual"),
+        streamHighwater = streamHighwater)
+    }
+
+  /** Open a persisted index: the model tables collect to the driver
+    * (nlist + m·k rows — a few KB, the same size class the direct path
+    * inlines as expression literals) and are cached per JVM (see
+    * [[modelCache]]); the codes table stays a lazy, partition-pruned
+    * DataFrame — the LIVE view, i.e. tombstoned ids from
+    * [[deleteFromIvfPqIndex]] are already excluded.
+    */
+  def openIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
+    // hot serve path: TTL-cached resolution (safe by generation
+    // retention — see AtomicStore.resolveCached)
+    openIn(PqCodec, spark, AtomicStore.resolveCached(spark, path))
+
+  /** Answer a query batch from a persisted index — no codebook fit, no
+    * corpus re-encode, no corpus vector reads: the plan is the probe-side
+    * kernel + a cell equi-join against the stored codes (whose partition
+    * layout prunes to the probed cells) + ADC ranking. Bit-identical
+    * results to the direct [[ivfPqTopK]] with the same parameters.
+    */
+  def ivfPqServe(
+      index: IvfPqIndex,
+      queryDf: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      nprobe: Int = 4
+  ): DataFrame =
+    scoreAssignedCells(index.codes, index.cents, index.books, index.residual,
+      queryDf, idCol, vecCol, k, nprobe, index.m, index.dim / index.m)
+
+  // ---- Persisted SQ×IVF index. Every mutation below carries the IVF-PQ
+  // entry point's contract of the same name, through the shared lifecycle.
+
+  /** Fit an SQ×IVF index on `df` and persist it under `path`: `meta`
+    * (one row of params), `centroids` (nlist rows) and `codes` — one
+    * `(id, c8)` row per corpus vector, partitioned by `cell`. The fit
+    * and encode are exactly [[sqIvfTopK]]'s (same deterministic coarse
+    * Lloyd's, same [[sqIvfEncode]] expressions), so serving from the
+    * store is bit-identical to the direct composition — the integer
+    * scores make that testable value-for-value.
+    */
+  def writeSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
+                      path: String, dim: Int, nlist: Int = 16,
+                      seed: Long = 42L, iters: Int = 10,
+                      streamHighwater: Option[Long] = None): Unit = {
     val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path,
-        owner = s"appendStreamBatch:b$batchId") {
+    import spark.implicits._
+    val cents = pqCodebooks(df, vecCol, dim, m = 1, codebookSize = nlist,
+      seed = seed, iters = iters, normalizeInput = false).head
+    // same crash-atomic generation publish as [[writeIvfPqIndex]]
+    val (gen, gdir) = AtomicStore.begin(spark, path)
+    AtomicStore.failpoint("sqivf:meta")
+    Seq((dim, nlist, seed, iters)).toDF("dim", "nlist", "seed", "iters")
+      .write.mode("overwrite").parquet(s"$gdir/meta")
+    AtomicStore.failpoint("sqivf:centroids")
+    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "vec")
+      .write.mode("overwrite").parquet(s"$gdir/centroids")
+    publish(SqCodec, spark, path, gen, gdir,
+      sqIvfEncode(df, idCol, vecCol, cents), streamHighwater)()
+  }
+
+  /** [[appendToIvfPqIndex]] on the SQ×IVF store. */
+  def appendToSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
+                         path: String): Unit =
+    append(SqCodec, df, idCol, vecCol, path, owner = "appendToSqIvfIndex")
+
+  /** [[deleteFromIvfPqIndex]] on the SQ×IVF store. */
+  def deleteFromSqIvfIndex(ids: DataFrame, idCol: String, path: String): Unit =
+    delete(SqCodec, ids, idCol, path, owner = "deleteFromSqIvfIndex")
+
+  /** [[compactIvfPqIndex]] on the SQ×IVF store. */
+  def compactSqIvfIndex(spark: SparkSession, path: String): Unit =
+    compact(SqCodec, spark, path, owner = "compactSqIvfIndex")
+
+  /** [[appendStreamBatch]] on the SQ×IVF store. */
+  def appendSqIvfStreamBatch(df: DataFrame, idCol: String, vecCol: String,
+                             path: String, batchId: Long): Boolean =
+    appendStream(SqCodec, df, idCol, vecCol, path, batchId,
+      "appendSqIvfStreamBatch")
+
+  /** [[compactIvfPqStreamExtension]] on the SQ×IVF store: meta and
+    * centroids copy verbatim (there is no codebook or cellstats).
+    */
+  def compactSqIvfStreamExtension(spark: SparkSession, path: String): Boolean =
+    fold(SqCodec, spark, path, owner = "compactSqIvfStreamExtension")
+
+  /** Staleness signal for the SQ×IVF store: the stream extension's share
+    * of the index (`streamed / fitted` row counts). The SQ fit has no
+    * per-cell codebooks to drift, but streamed vectors are still binned
+    * by centroids fit on the OLD distribution — past a deployment's
+    * tolerance the coarse balance degrades and a refit re-fits the cells
+    * over the full current corpus. Parquet row counts come from footer
+    * metadata; the probe is a metadata round-trip, not a scan.
+    */
+  def sqIvfStreamGrowth(spark: SparkSession, path: String): Double = {
+    val dir = AtomicStore.resolve(spark, path)
+    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
+    if (!AtomicStore.fs(spark, dir).exists(extP)) 0.0
+    else {
+      val base = spark.read.parquet(s"$dir/codes")
+      val streamed = readStreamExt(spark, extP.toString, base.schema).count()
+      streamed.toDouble / math.max(base.count(), 1L)
+    }
+  }
+
+  /** Growth-triggered SQ×IVF refit — the [[refitIvfPqIndex]] arc on the
+    * int8 store: when the stream extension's share reaches `threshold`,
+    * refit from the CURRENT corpus `df` with the persisted meta params
+    * (bit-identical to a fresh fit on today's corpus with the same seed,
+    * and the fresh generation starts with no extension). Returns whether
+    * a refit happened.
+    */
+  def refitSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
+                      path: String, threshold: Double = 0.5,
+                      streamHighwater: Option[Long] = None): Boolean =
+    refit(SqCodec, df.sparkSession, path, threshold, "refitSqIvfIndex") { meta =>
+      writeSqIvfIndex(df, idCol, vecCol, path,
+        dim = meta.getAs[Int]("dim"),
+        nlist = meta.getAs[Int]("nlist"),
+        seed = meta.getAs[Long]("seed"),
+        iters = meta.getAs[Int]("iters"),
+        streamHighwater = streamHighwater)
+    }
+
+  /** Open a persisted SQ×IVF index: the centroid table collects to the
+    * driver (nlist rows) and is cached per JVM; the codes table stays a
+    * lazy partition-pruned DataFrame (the live view).
+    */
+  def openSqIvfIndex(spark: SparkSession, path: String): SqIvfIndex =
+    openIn(SqCodec, spark, AtomicStore.resolveCached(spark, path))
+
+  /** Answer a query batch from a persisted SQ×IVF index — no coarse
+    * fit, no corpus re-encode: probe-side kernel + cell equi-join
+    * against the stored codes + integer-dot ranking. Bit-identical to
+    * the direct [[sqIvfTopK]] with the same parameters.
+    */
+  def sqIvfServeIndex(index: SqIvfIndex, queries: DataFrame, idCol: String,
+                      vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
+    sqIvfServe(index.codes, queries, idCol, vecCol, k, index.cents, nprobe)
+
+  // ---- The shared store lifecycle, parameterised by an AnnCodec. Each
+  // mutation takes the store's mutation lease under the public entry
+  // point's name (`owner`) and resolves the committed generation ONCE;
+  // every sub-step works inside it.
+
+  private def append[I](c: AnnCodec[I], df: DataFrame, idCol: String,
+                        vecCol: String, path: String, owner: String): Unit =
+    AtomicStore.withMutationLease(df.sparkSession, path, owner = owner) {
+      // a crashed append is invisible: parquet appends stage in
+      // `_temporary/`, which readers ignore
+      val dir = AtomicStore.resolve(df.sparkSession, path)
+      encodeLive(c, df, idCol, vecCol, dir)
+        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+    }
+
+  /** Encode `df` with generation `dir`'s stored model, first compacting
+    * when one of its ids collides with a tombstone — so delete→re-add is
+    * an upsert and only the new vector serves.
+    */
+  private def encodeLive[I](c: AnnCodec[I], df: DataFrame, idCol: String,
+                            vecCol: String, dir: String): DataFrame = {
+    val spark = df.sparkSession
+    val ids = df.select(col(idCol).as(c.idCol)).distinct()
+    // fast path: no tombstones, or none colliding — just a semi-join probe
+    if (AtomicStore.tombstonesOpt(spark, dir)
+          .exists(t => !t.join(ids, Seq(c.idCol), "left_semi").isEmpty))
+      compactIn(c, spark, dir)
+    c.encode(openIn(c, spark, dir), df, idCol, vecCol)
+  }
+
+  private def delete(c: AnnCodec[_], ids: DataFrame, idCol: String,
+                     path: String, owner: String): Unit =
+    AtomicStore.withMutationLease(ids.sparkSession, path, owner = owner) {
+      ids.select(col(idCol).as(c.idCol)).distinct()
+        .write.mode("append").parquet(
+          s"${AtomicStore.resolve(ids.sparkSession, path)}/tombstones")
+    }
+
+  /** The replay-idempotent stream append behind [[appendStreamBatch]];
+    * `entry` names the public entry point in the lease and the warning.
+    */
+  private def appendStream[I](c: AnnCodec[I], df: DataFrame, idCol: String,
+                              vecCol: String, path: String, batchId: Long,
+                              entry: String): Boolean = {
+    val spark = df.sparkSession
+    AtomicStore.withMutationLease(spark, path, owner = s"$entry:b$batchId") {
       val dir = AtomicStore.resolve(spark, path)
-      val hwSkip = streamHighwaterOf(spark, dir).filter(_ >= batchId)
-      if (hwSkip.isDefined) {
+      streamHighwaterOf(spark, dir).filter(_ >= batchId) match {
         // a skip is only legitimate replay absorption when the replayed id
         // is AT or just under the folded watermark. A LARGE gap means the
         // stream restarted with a NEW checkpoint (batch ids reset to 0)
@@ -1261,9 +1432,8 @@ object Similarity {
         // would wedge a legitimate replay, hence warn-not-throw) AND
         // leave a MACHINE-READABLE record the stream owner can assert on
         // ([[skippedStreamBatches]]) — a stderr line is not a signal
-        val hw = hwSkip.get
-        if (hw - batchId > 1L) {
-          System.err.println(s"[graft] appendStreamBatch: batch $batchId " +
+        case Some(hw) if hw - batchId > 1L =>
+          System.err.println(s"[graft] $entry: batch $batchId " +
             s"skipped by stream highwater $hw at $path — a gap this large " +
             "usually means the stream restarted with a FRESH checkpoint " +
             "(batch ids reset) against an existing index; those batches are " +
@@ -1272,21 +1442,16 @@ object Similarity {
             "_skipped_batches (see Similarity.skippedStreamBatches).")
           recordSkippedBatch(spark, path, batchId, hw)
           true // DROPPED — the caller may choose to fail fast
-        } else false // legitimate replay absorption, not data loss
-      } else {
-        val ids = df.select(col(idCol).as("cid")).distinct()
-        if (tombstonesOpt(spark, dir)
-              .exists(t => !t.join(ids, Seq("cid"), "left_semi").isEmpty))
-          compactIn(spark, dir)
-        val index = openIvfPqIndexIn(spark, dir)
-        encodeForIndex(index, df, idCol, vecCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell")
-          .parquet(s"$dir/codes_stream")
-        writeBatchSentinel(spark, dir, batchId)
-        false
+        case Some(_) => false // legitimate replay absorption, not data loss
+        case None =>
+          encodeLive(c, df, idCol, vecCol, dir)
+            .withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", "cell")
+            .parquet(s"$dir/codes_stream")
+          writeBatchSentinel(spark, dir, batchId)
+          false
       }
     }
   }
@@ -1301,7 +1466,7 @@ object Similarity {
   private def recordSkippedBatch(spark: SparkSession, path: String,
                                  batchId: Long, highwater: Long): Unit = {
     val dirP = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches")
-    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = AtomicStore.fs(spark, path)
     fs.mkdirs(dirP)
     // BOUNDED ledger: a misconfigured fresh-checkpoint stream left
     // running drops EVERY batch — per-batch markers for the first
@@ -1316,10 +1481,8 @@ object Similarity {
       try fs.create(f, false).close()
       catch { case _: java.io.IOException => () } // replayed skip: same record
     } else {
-      val o = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches/overflow")
-      val out = fs.create(o, true)
-      try out.write(s"$batchId:$highwater".getBytes("UTF-8"))
-      finally out.close()
+      AtomicStore.writeSmallFile(fs, new org.apache.hadoop.fs.Path(
+        s"$path/_skipped_batches/overflow"), s"$batchId:$highwater")
     }
   }
 
@@ -1339,7 +1502,7 @@ object Similarity {
   def skippedStreamBatches(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val dirP = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches")
-    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = AtomicStore.fs(spark, path)
     val names: Seq[String] =
       if (!fs.exists(dirP)) Seq.empty
       else fs.listStatus(dirP).toSeq.map(_.getPath.getName)
@@ -1350,12 +1513,8 @@ object Similarity {
     }
     // past the cap the latest drop lives in the single overflow record
     val overflow = if (!names.contains("overflow")) Seq.empty else {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches/overflow")
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, "UTF-8").trim.split(":", 2) match {
+      AtomicStore.readSmallFile(fs, new org.apache.hadoop.fs.Path(
+        s"$path/_skipped_batches/overflow")).split(":", 2) match {
         case Array(b, hw) => Seq((b.toLong, hw.toLong))
         case _ => Seq.empty
       }
@@ -1363,19 +1522,10 @@ object Similarity {
     (itemized ++ overflow).distinct.sorted.toDF("batch_id", "highwater")
   }
 
-  /** Fold accumulated tombstones into the codes layout: rewrite ONLY the
-    * cell partitions that actually contain a tombstoned id (dynamic
-    * partition overwrite — untouched cells keep their original files),
-    * then drop the tombstones table. Serving before and after compaction
-    * is bit-identical by construction; compaction just reclaims the dead
-    * rows and re-arms [[deleteFromIvfPqIndex]] for id reuse.
-    *
-    * The affected-cell list collects to the driver — bounded by nlist,
-    * same size class as the centroid table.
-    */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
-    AtomicStore.withMutationLease(spark, path, owner = "compactIvfPqIndex") {
-      compactIn(spark, AtomicStore.resolve(spark, path))
+  private def compact(c: AnnCodec[_], spark: SparkSession, path: String,
+                      owner: String): Unit =
+    AtomicStore.withMutationLease(spark, path, owner = owner) {
+      compactIn(c, spark, AtomicStore.resolve(spark, path))
     }
 
   /** [[compactIvfPqIndex]] inside an already-resolved generation
@@ -1391,12 +1541,11 @@ object Similarity {
     * the tombstones would resurrect it (the anti-join mask disappears
     * while its physical rows survive).
     */
-  private def compactIn(spark: SparkSession, dir: String): Unit =
-    tombstonesOpt(spark, dir).foreach { tomb =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+  private def compactIn(c: AnnCodec[_], spark: SparkSession, dir: String): Unit =
+    AtomicStore.tombstonesOpt(spark, dir).foreach { tomb =>
+      val fs = AtomicStore.fs(spark, dir)
       val base = spark.read.parquet(s"$dir/codes")
-      compactTable(spark, fs, s"$dir/codes", Seq("cell"), tomb, base)
+      compactTable(spark, fs, s"$dir/codes", Seq("cell"), tomb, base, c.idCol)
       // the stream leg reads via readStreamExt (explicit schema), never
       // inference: an extension directory with no committed data files —
       // every partition deleted by an EARLIER tombstone compaction, or a
@@ -1407,7 +1556,7 @@ object Similarity {
         compactTable(spark, fs, s"$dir/codes_stream",
           Seq("batch_id", "cell"), tomb,
           readStreamExt(spark, s"$dir/codes_stream", base.schema),
-          allowEmpty = true)
+          c.idCol, allowEmpty = true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
     }
 
@@ -1420,7 +1569,7 @@ object Similarity {
                            fs: org.apache.hadoop.fs.FileSystem,
                            table: String, partCols: Seq[String],
                            tomb: DataFrame, codes: DataFrame,
-                           idJoin: String = "cid",
+                           idJoin: String,
                            allowEmpty: Boolean = false): Unit = {
     def partPath(vals: Seq[Any]): String =
       partCols.zip(vals).map { case (c, v) => s"$c=$v" }.mkString("/")
@@ -1430,7 +1579,7 @@ object Similarity {
     if (affected.nonEmpty) {
       // survivors of the affected partitions only; staged through a temp
       // dir because Spark refuses to overwrite a path it is reading from
-      val tmp = s"$table${CompactTmpSuffix}"
+      val tmp = s"${table}_compact_tmp"
       val hit = affected.map(partPath).toSet
       // OR-of-equalities over the partition columns: partition pruning
       // handles equality disjunctions, so only the affected partition
@@ -1448,9 +1597,7 @@ object Similarity {
           }.reduce(_ || _))
         else {
           import spark.implicits._
-          val tuples = affected.map(vals =>
-            partCols.zip(vals).map { case (c, v) => s"$c=$v" }.mkString("/"))
-            .toSeq.toDF("__part")
+          val tuples = affected.map(partPath).toSeq.toDF("__part")
           codes.withColumn("__part", concat_ws("/",
               partCols.map(c => concat(lit(c + "="), col(c).cast("string"))): _*))
             .join(broadcast(tuples), Seq("__part"), "left_semi")
@@ -1494,8 +1641,6 @@ object Similarity {
     }
   }
 
-  private val CompactTmpSuffix = "_compact_tmp"
-
   /** Affected-partition count above which [[compactTable]] switches from
     * the prunable OR-of-equalities filter to a broadcast semi-join (see
     * inline note); test-visible so the join leg is exercised at small
@@ -1503,39 +1648,19 @@ object Similarity {
     */
   private[graft] var CompactPredicateMaxTerms = 256
 
-  /** Fold the stream extension into the base codes table, in a FRESH
-    * generation — the small-file compaction a long-running
-    * [[appendStreamBatch]] ingestion needs: the extension keeps one
-    * `(batch_id, cell)` partition directory per micro-batch × cell (the
-    * price of idempotent replay), so months of micro-batches leave
-    * thousands of tiny files and the serve-time union goes
-    * metadata-bound. No model work is redone: meta, centroids, codebooks
-    * and the fit-time `cellstats` snapshot are copied verbatim (the
-    * drift baseline must stay the FIT's occupancy), tombstones are
-    * folded first ([[compactIn]]), the merged live rows are rewritten
-    * cell-partitioned, and the new generation's stream highwater is
-    * raised to the highest folded batch id — so an at-least-once replay
-    * of any folded batch is absorbed exactly as after a refit. Published
-    * with the same crash-atomic marker commit: a killed compaction
-    * leaves readers on the old generation.
-    *
-    * Serving, drift, and replay semantics are bit-identical before and
-    * after; only the file layout (and the absence of the union branch)
-    * changes. Returns false when there is no extension to fold.
-    */
-  def compactIvfPqStreamExtension(spark: SparkSession, path: String): Boolean =
-    AtomicStore.withMutationLease(spark, path,
-      owner = "compactIvfPqStreamExtension") {
-      compactIvfPqStreamExtensionIn(spark, path)
+  private def fold(c: AnnCodec[_], spark: SparkSession, path: String,
+                   owner: String): Boolean =
+    AtomicStore.withMutationLease(spark, path, owner = owner) {
+      foldIn(c, spark, path)
     }
 
-  private def compactIvfPqStreamExtensionIn(spark: SparkSession,
-                                            path: String): Boolean = {
+  /** [[compactIvfPqStreamExtension]] under the held lease. */
+  private def foldIn(c: AnnCodec[_], spark: SparkSession, path: String): Boolean = {
     val dir = AtomicStore.resolve(spark, path)
     val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val extFs = extP.getFileSystem(spark.sessionState.newHadoopConf())
+    val extFs = AtomicStore.fs(spark, dir)
     if (!extFs.exists(extP)) return false
-    compactIn(spark, dir) // fold tombstones into BOTH tables first
+    compactIn(c, spark, dir) // fold tombstones into BOTH tables first
     // a data-free extension (every streamed row tombstone-compacted
     // away) has nothing to fold — remove the empty directory so later
     // opens skip the union branch entirely
@@ -1563,349 +1688,191 @@ object Similarity {
     val merged = base.unionByName(
       foldable.select(base.columns.toIndexedSeq.map(col): _*))
     val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("ivfpq:meta")
-    Seq("meta", "centroids", "codebooks", "cellstats").foreach { t =>
+    AtomicStore.failpoint(s"${c.prefix}:meta")
+    c.modelTables.foreach { t =>
       spark.read.parquet(s"$dir/$t").write.mode("overwrite").parquet(s"$gdir/$t")
     }
-    AtomicStore.failpoint("ivfpq:codes")
-    merged.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    if (maxComplete < maxBatch) {
-      carry.write.mode("overwrite").partitionBy("batch_id", "cell")
-        .parquet(s"$gdir/codes_stream")
-      // convention marker: the carried extension has no sentinels of its
-      // own — without this a second fold would misread it as legacy
-      extFs.create(new org.apache.hadoop.fs.Path(
-        s"$gdir/codes_stream/_sentinels_enabled"), true).close()
+    publish(c, spark, path, gen, gdir, merged, Some(hw)) {
+      if (maxComplete < maxBatch) {
+        carry.write.mode("overwrite").partitionBy("batch_id", "cell")
+          .parquet(s"$gdir/codes_stream")
+        // convention marker: the carried extension has no sentinels of its
+        // own — without this a second fold would misread it as legacy
+        extFs.create(new org.apache.hadoop.fs.Path(
+          s"$gdir/codes_stream/_sentinels_enabled"), true).close()
+      }
     }
-    writeStreamHighwater(spark, gdir, Some(hw))
-    AtomicStore.commit(spark, path, gen)
-    invalidateIndexModel(path)
     true
   }
 
-  /** Staleness signal: per-cell LIVE occupancy (appends minus tombstoned
-    * deletes) vs the fit-time snapshot, plus the growth ratio. A cell
-    * whose `growth` is large holds many vectors the coarse quantizer
-    * never saw at fit time; a strongly negative `growth` means the cell
-    * has drained — both directions distort the fit-time balance, so
-    * refit when |growth| passes the deployment's tolerance. Full outer:
-    * a cell that only gained vectors after fit shows `n_fit` 0.
+  /** Staleness-gated refit: below `threshold` the store is untouched;
+    * otherwise `fit` rewrites it from the persisted meta row (a fresh
+    * generation, which starts with no tombstones — a refit defines the
+    * whole store).
     */
-  def ivfPqCellDrift(spark: SparkSession, path: String): DataFrame = {
-    val dir = AtomicStore.resolve(spark, path)
-    val fit = spark.read.parquet(s"$dir/cellstats")
-    val now = liveCodes(spark, dir)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_now"))
-    fit.join(now, Seq("cell"), "full")
-      .select(col("cell"),
-        coalesce(col("n_fit"), lit(0L)).as("n_fit"),
-        coalesce(col("n_now"), lit(0L)).as("n_now"))
-      .withColumn("growth",
-        (col("n_now") - col("n_fit")) / greatest(col("n_fit"), lit(1L)))
-  }
-
-  /** Drift-triggered refit — the last arc of the index lifecycle
-    * (fit → serve → append → delete → compact → drift → REFIT). When the
-    * staleness signal ([[ivfPqCellDrift]]) reports a cell whose |growth|
-    * meets `threshold`, the coarse quantizer and codebooks are refit from
-    * the CURRENT corpus `df` (the index is derived state; the embedding
-    * table is the source of truth — the data-lake shape, not a
-    * reconstruct-from-codes hack) and every cell is rewritten via
-    * [[writeIvfPqIndex]] with the persisted meta params, so a refit index
-    * is bit-identical to one fit fresh on today's corpus with the same
-    * seed. Accumulated tombstones are dropped: the rewrite IS the
-    * compaction. Returns whether a refit happened — below the threshold
-    * the store is untouched (the cheap steady-state probe).
-    */
-  def refitIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-                      path: String, threshold: Double = 0.5,
-                      streamHighwater: Option[Long] = None): Boolean =
-    AtomicStore.withMutationLease(df.sparkSession, path,
-        owner = "refitIvfPqIndex") {
-      val spark = df.sparkSession
-      val worst = ivfPqCellDrift(spark, path)
-        .agg(max(abs(col("growth")))).head().getDouble(0)
-      if (worst < threshold) false
+  private def refit(c: AnnCodec[_], spark: SparkSession, path: String,
+                    threshold: Double, owner: String)
+                   (fit: org.apache.spark.sql.Row => Unit): Boolean =
+    AtomicStore.withMutationLease(spark, path, owner = owner) {
+      if (c.staleness(spark, path) < threshold) false
       else {
-        val meta = spark.read
-          .parquet(s"${AtomicStore.resolve(spark, path)}/meta").head()
-        writeIvfPqIndex(df, idCol, vecCol, path,
-          dim = meta.getAs[Int]("dim"),
-          nlist = meta.getAs[Int]("nlist"),
-          m = meta.getAs[Int]("m"),
-          codebookSize = meta.getAs[Int]("codebook_size"),
-          seed = meta.getAs[Long]("seed"),
-          residual = meta.getAs[Boolean]("residual"),
-          streamHighwater = streamHighwater)
-        // (the refit commits a FRESH generation, which starts with no
-        // tombstones — a refit defines the whole store)
+        fit(spark.read.parquet(s"${AtomicStore.resolve(spark, path)}/meta").head())
         true
       }
     }
 
-  /** Per-JVM cache of opened index MODELS (centroids/codebooks/params):
-    * a server loads the model once and serves many batches — re-collecting
-    * three parquet tables per query benchmarks the open path, not serving.
-    * Keyed by the GENERATION directory, which is immutable once committed
-    * (a refit publishes a NEW generation — `AtomicStore`), so an entry can
-    * never go stale: an out-of-process refit changes what
-    * [[openIvfPqIndex]] resolves to, which is a different cache key.
-    * Append/delete/compact touch only the codes/tombstones, which stay
-    * lazy per call.
+  /** The shared tail of every generation a fit or fold writes: the codes
+    * table, then what derives from it (`afterCodes`), then the stream
+    * highwater (`_stream_highwater`, written or scrubbed), the commit and
+    * the model-cache invalidation.
+    *
+    * Stream-maintained indexes record the last FOLDED micro-batch id
+    * INSIDE the generation, before the commit — atomic with the fit, so
+    * an at-least-once replay of that batch can never double-apply it (the
+    * append guard reads this watermark); a non-stream fit scrubs any
+    * stale one from a reused generation directory.
     */
-  private val indexModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Int, Int, Boolean,
-      org.apache.spark.sql.types.StructType)]
-
-  /** Drop any cached model generations under `path` — belt-and-braces
-    * bound on the cache (generation keys expire naturally; this frees
-    * them eagerly after an in-process rewrite).
-    */
-  def invalidateIndexModel(path: String): Unit = {
-    indexModelCache.keys
-      .filter(k => k == path || k.startsWith(path + "/"))
-      .foreach(indexModelCache.remove)
-  }
-
-  /** Open a persisted index: the model tables collect to the driver
-    * (nlist + m·k rows — a few KB, the same size class the direct path
-    * inlines as expression literals) and are cached per JVM (see
-    * [[indexModelCache]]); the codes table stays a lazy, partition-pruned
-    * DataFrame — the LIVE view, i.e. tombstoned ids from
-    * [[deleteFromIvfPqIndex]] are already excluded.
-    */
-  def openIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
-    // hot serve path: TTL-cached resolution (safe by generation
-    // retention — see AtomicStore.resolveCached)
-    openIvfPqIndexIn(spark, AtomicStore.resolveCached(spark, path))
-
-  /** [[openIvfPqIndex]] with the generation directory already resolved —
-    * the mutation paths resolve once and reuse it.
-    */
-  private def openIvfPqIndexIn(spark: SparkSession, dir: String): IvfPqIndex = {
-    val (cents, books, dim, m, residual, codesSchema) =
-      indexModelCache.getOrElseUpdate(dir, {
-        val meta = spark.read.parquet(s"$dir/meta").head()
-        val mm = meta.getAs[Int]("m")
-        val cs = spark.read.parquet(s"$dir/centroids")
-          .orderBy("cell").collect()
-          .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
-        val booksFlat = spark.read.parquet(s"$dir/codebooks")
-          .orderBy("j", "c").collect()
-          .map(r => (r.getAs[Int]("j"), r.getSeq[Double](r.fieldIndex("vec"))))
-        val bs = (0 until mm).map(j =>
-          booksFlat.filter(_._1 == j).map(_._2).toSeq).toSeq
-        // the codes schema rides in the model cache: append/delete/compact
-        // preserve it (same encoder, same partition layout), so later
-        // serves skip the per-open schema-inference job
-        val codesSchema = spark.read.parquet(s"$dir/codes").schema
-        (cs, bs, meta.getAs[Int]("dim"), mm,
-          meta.getAs[Boolean]("residual"), codesSchema)
-      })
-    IvfPqIndex(cents, books, dim, m, residual,
-      liveCodes(spark, dir, Some(codesSchema)))
-  }
-
-  /** Answer a query batch from a persisted index — no codebook fit, no
-    * corpus re-encode, no corpus vector reads: the plan is the probe-side
-    * kernel + a cell equi-join against the stored codes (whose partition
-    * layout prunes to the probed cells) + ADC ranking. Bit-identical
-    * results to the direct [[ivfPqTopK]] with the same parameters.
-    */
-  def ivfPqServe(
-      index: IvfPqIndex,
-      queryDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int = 4
-  ): DataFrame =
-    scoreAssignedCells(index.codes, index.cents, index.books, index.residual,
-      queryDf, idCol, vecCol, k, nprobe, index.m, index.dim / index.m)
-
-  // ---------------------------------------------------------------- //
-  // Persisted SQ×IVF index — the int8 tier's fit-once/serve-many      //
-  // store (r14 shipped the in-memory split; without a store a server  //
-  // restart re-encoded the corpus). Same lifecycle shape as IVF-PQ:   //
-  // a driver-held model (centroids only — SQ needs no codebooks, its  //
-  // scale is the fixed constant 1/127) plus a cell-partitioned codes  //
-  // table, opened through a per-JVM model cache.                      //
-  // ---------------------------------------------------------------- //
-
-  /** An opened on-disk SQ×IVF index: the coarse centroids (nlist × dim
-    * doubles, driver-held like the literals the direct path inlines) and
-    * the lazy cell-partitioned `(id, c8)` codes table.
-    */
-  case class SqIvfIndex(cents: Seq[Seq[Double]], dim: Int, codes: DataFrame)
-
-  /** Fit an SQ×IVF index on `df` and persist it under `path`: `meta`
-    * (one row of params), `centroids` (nlist rows) and `codes` — one
-    * `(id, c8)` row per corpus vector, partitioned by `cell`. The fit
-    * and encode are exactly [[sqIvfTopK]]'s (same deterministic coarse
-    * Lloyd's, same [[sqIvfEncode]] expressions), so serving from the
-    * store is bit-identical to the direct composition — the integer
-    * scores make that testable value-for-value.
-    */
-  def writeSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                      path: String, dim: Int, nlist: Int = 16,
-                      seed: Long = 42L, iters: Int = 10,
-                      streamHighwater: Option[Long] = None): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents = pqCodebooks(df, vecCol, dim, m = 1, codebookSize = nlist,
-      seed = seed, iters = iters, normalizeInput = false).head
-    // same crash-atomic generation publish as [[writeIvfPqIndex]]
-    val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("sqivf:meta")
-    Seq((dim, nlist, seed, iters)).toDF("dim", "nlist", "seed", "iters")
-      .write.mode("overwrite").parquet(s"$gdir/meta")
-    AtomicStore.failpoint("sqivf:centroids")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$gdir/centroids")
-    AtomicStore.failpoint("sqivf:codes")
-    sqIvfEncode(df, idCol, vecCol, cents)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    // same stream-watermark contract as [[writeIvfPqIndex]]: the last
-    // FOLDED micro-batch id lands inside the generation, atomic with the
-    // fit; a non-stream fit scrubs any stale one from a reused directory
-    writeStreamHighwater(spark, gdir, streamHighwater)
-    AtomicStore.commit(spark, path, gen)
-    invalidateSqIvfModel(path)
-  }
-
-  /** Write (or scrub) a generation directory's `_stream_highwater` —
-    * shared by the IVF-PQ and SQ×IVF fit paths; see [[writeIvfPqIndex]]'s
-    * inline doc for the atomicity argument.
-    */
-  private def writeStreamHighwater(spark: SparkSession, gdir: String,
-                                   streamHighwater: Option[Long]): Unit = {
+  private def publish(c: AnnCodec[_], spark: SparkSession, path: String,
+                      gen: Long, gdir: String, codes: DataFrame,
+                      streamHighwater: Option[Long])
+                     (afterCodes: => Unit = ()): Unit = {
+    AtomicStore.failpoint(s"${c.prefix}:codes")
+    codes.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
+    afterCodes
     val hwPath = new org.apache.hadoop.fs.Path(s"$gdir/_stream_highwater")
-    val hwFs = hwPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val hwFs = AtomicStore.fs(spark, gdir)
     streamHighwater match {
-      case Some(hw) =>
-        val out = hwFs.create(hwPath, true)
-        try out.write(hw.toString.getBytes("UTF-8")) finally out.close()
+      case Some(hw) => AtomicStore.writeSmallFile(hwFs, hwPath, hw.toString)
       case None =>
         if (hwFs.exists(hwPath)) { hwFs.delete(hwPath, false); () }
     }
+    AtomicStore.commit(spark, path, gen)
+    // the model under `path` just changed — drop its cached generations
+    // (belt-and-braces: generation keys never go stale, this frees them
+    // eagerly after an in-process rewrite)
+    modelCache.keys
+      .filter { case (_, k) => k == path || k.startsWith(path + "/") }
+      .foreach(modelCache.remove)
   }
 
-  /** Append new vectors: encode with the STORED centroids (no refit —
-    * existing codes stay valid) into the same cell-partitioned layout.
-    * Caller owns id-uniqueness, like [[appendToIvfPqIndex]].
+  /** Per-JVM cache of opened index MODELS (the codec's driver-side tables
+    * plus the codes schema): a server loads the model once and serves
+    * many batches — re-collecting the model tables per query benchmarks
+    * the open path, not serving. Keyed by codec and GENERATION directory,
+    * which is immutable once committed (a refit or fold publishes a NEW
+    * generation — `AtomicStore`), so an entry can never go stale: an
+    * out-of-process refit changes what the open resolves to, which is a
+    * different cache key. Append/delete/compact touch only the
+    * codes/tombstones, which stay lazy per call.
     */
-  def appendToSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                         path: String): Unit = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path, owner = "appendToSqIvfIndex") {
-      val dir = AtomicStore.resolve(spark, path)
-      // delete→re-add is an upsert, like [[appendToIvfPqIndex]]: an id
-      // colliding with a tombstone compacts first so only the new row serves
-      val ids = df.select(col(idCol).as("id")).distinct()
-      if (tombstonesOpt(spark, dir)
-            .exists(t => !t.join(ids, Seq("id"), "left_semi").isEmpty))
-        sqCompactIn(spark, dir)
-      val index = openSqIvfIndexIn(spark, dir)
-      sqIvfEncode(df, idCol, vecCol, index.cents)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+  private val modelCache = scala.collection.concurrent.TrieMap.empty[
+    (AnnCodec[_], String),
+    (DataFrame => Any, org.apache.spark.sql.types.StructType)]
+
+  /** Open generation `dir` (already resolved — the mutation paths resolve
+    * once and reuse it): the cached model over the live codes view.
+    */
+  private def openIn[I](c: AnnCodec[I], spark: SparkSession, dir: String): I = {
+    val (model, codesSchema) = modelCache.getOrElseUpdate((c, dir),
+      // the codes schema rides in the model cache: append/delete/compact
+      // preserve it (same encoder, same partition layout), so later
+      // serves skip the per-open schema-inference job
+      (c.loadModel(spark, dir), spark.read.parquet(s"$dir/codes").schema))
+    model(liveCodes(c, spark, dir, Some(codesSchema))).asInstanceOf[I]
+  }
+
+  /** Schema-robust read of a `codes_stream` extension table: an EXPLICIT
+    * schema (the base codes schema + the `batch_id` partition column),
+    * so a directory holding no committed parquet files — every row
+    * tombstone-compacted away, or a crashed FIRST append's lone
+    * `_temporary/` — reads as an empty frame instead of failing schema
+    * inference and bricking every open/serve on the store.
+    */
+  private def readStreamExt(spark: SparkSession, extPath: String,
+      baseSchema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(org.apache.spark.sql.types.StructType(
+        baseSchema.fields :+ org.apache.spark.sql.types.StructField(
+          "batch_id", org.apache.spark.sql.types.LongType)))
+      .parquet(extPath)
+
+  /** The live view of the codes table: stored codes minus tombstoned ids.
+    * The anti-join broadcasts while the tombstone set is small (the
+    * normal regime — compaction keeps it from growing unboundedly) and
+    * degrades to a shuffled anti-join, never a scan-per-id, beyond that.
+    */
+  private def liveCodes(c: AnnCodec[_], spark: SparkSession, dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
+    val base = reader.parquet(s"$dir/codes")
+    // stream-grown extension ([[appendStreamBatch]]): same (id, codes,
+    // cell) rows, additionally partitioned by batch_id for idempotent
+    // replay — union preserves cell partition pruning on both sides
+    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
+    val codes =
+      if (AtomicStore.fs(spark, dir).exists(extP))
+        base.unionByName(readStreamExt(spark, extP.toString, base.schema)
+          .select(base.columns.toIndexedSeq.map(col): _*))
+      else base
+    AtomicStore.tombstonesOpt(spark, dir)
+      .map(t => codes.join(t, Seq(c.idCol), "left_anti")).getOrElse(codes)
+  }
+
+  /** Mark a stream micro-batch's extension write as fully JOB-COMMITTED:
+    * an empty `_complete_b<N>` file at the extension root, created only
+    * AFTER the batch's parquet job commits (and re-created by an
+    * at-least-once replay's rewrite). The extension folds read these as
+    * the completion boundary: a kill inside the parquet job — including
+    * inside the committer's file-move loop, which leaves PARTIAL data
+    * files — leaves no sentinel, so a fold that runs before the stream
+    * restarts must neither merge that batch's partial rows into base nor
+    * raise the highwater over it (the replay would then be absorbed and
+    * the partial rows would serve forever). Underscore-prefixed, so
+    * Spark's file index and [[streamExtensionDirCount]] both ignore it;
+    * the files live and die with the extension directory.
+    */
+  private def writeBatchSentinel(spark: SparkSession, dir: String,
+                                 batchId: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(
+      s"$dir/codes_stream/_complete_b$batchId")
+    AtomicStore.fs(spark, dir).create(p, true).close()
+  }
+
+  /** Batch ids the extension holds completion sentinels for. `None` for
+    * a PRE-SENTINEL (legacy) extension — no `_complete_b*` and no
+    * `_sentinels_enabled` convention marker — which the folds treat as
+    * all-complete (the pre-sentinel behavior). `Some(empty)` is an
+    * extension that follows the convention but holds no complete batch:
+    * a fold that CARRIED a partial batch writes the convention marker
+    * alongside it, so a second fold before the replay arrives cannot
+    * mistake the carried rows for a legacy all-complete extension and
+    * fold them after all.
+    */
+  private def sentineledBatches(spark: SparkSession,
+      extP: org.apache.hadoop.fs.Path): Option[Set[Long]] = {
+    val fs = AtomicStore.fs(spark, extP.toString)
+    if (!fs.exists(extP)) None
+    else {
+      val names = fs.listStatus(extP).iterator
+        .filter(_.isFile).map(_.getPath.getName).toSeq
+      val ids = names.filter(_.startsWith("_complete_b"))
+        .flatMap(n => scala.util.Try(
+          n.drop("_complete_b".length).toLong).toOption)
+        .toSet
+      if (ids.isEmpty && !names.contains("_sentinels_enabled")) None
+      else Some(ids)
     }
   }
 
-  /** Delete vectors from a persisted SQ×IVF index by id — the
-    * [[deleteFromIvfPqIndex]] contract on the int8 store: ids append to a
-    * `tombstones` table (cheap regardless of corpus size),
-    * [[openSqIvfIndex]] anti-joins the codes so serving sees only live
-    * vectors immediately, and the dead rows stay on disk until
-    * [[compactSqIvfIndex]] rewrites their cells. Same tombstone caveats
-    * (compact before re-add — [[appendToSqIvfIndex]] does it
-    * automatically on collision) and the same single-writer discipline
-    * for deletes vs a live [[appendSqIvfStreamBatch]] stream.
+  /** Last micro-batch id a generation's FIT already folded in — written
+    * by a stream-triggered refit ([[writeIvfPqIndex]]'s `streamHighwater`)
+    * atomically with the generation.
     */
-  def deleteFromSqIvfIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    AtomicStore.withMutationLease(ids.sparkSession, path,
-        owner = "deleteFromSqIvfIndex") {
-      ids.select(col(idCol).as("id")).distinct()
-        .write.mode("append").parquet(
-          s"${AtomicStore.resolve(ids.sparkSession, path)}/tombstones")
-    }
-
-  /** Fold accumulated SQ×IVF tombstones into the codes layout — the
-    * [[compactIvfPqIndex]] twin: rewrite only the cell partitions holding
-    * a tombstoned id (both the base `codes` AND the `codes_stream`
-    * extension — a streamed-in dead row must not resurrect when the mask
-    * drops), then drop the tombstones table. Serving before and after is
-    * bit-identical by construction.
-    */
-  def compactSqIvfIndex(spark: SparkSession, path: String): Unit =
-    AtomicStore.withMutationLease(spark, path, owner = "compactSqIvfIndex") {
-      sqCompactIn(spark, AtomicStore.resolve(spark, path))
-    }
-
-  private def sqCompactIn(spark: SparkSession, dir: String): Unit =
-    tombstonesOpt(spark, dir).foreach { tomb =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val base = spark.read.parquet(s"$dir/codes")
-      compactTable(spark, fs, s"$dir/codes", Seq("cell"), tomb, base,
-        idJoin = "id")
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_stream")))
-        compactTable(spark, fs, s"$dir/codes_stream",
-          Seq("batch_id", "cell"), tomb,
-          readStreamExt(spark, s"$dir/codes_stream", base.schema),
-          idJoin = "id", allowEmpty = true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-    }
-
-  /** Streaming-grade SQ×IVF append — [[appendStreamBatch]]'s exact
-    * contract on the int8 store: encode with the STORED centroids into
-    * the `codes_stream` extension, partitioned `(batch_id, cell)` with
-    * dynamic partition overwrite (an at-least-once replay rewrites its
-    * own partitions), and skip batches at or below the generation's
-    * stream highwater (a refit already folded them, atomically).
-    */
-  def appendSqIvfStreamBatch(df: DataFrame, idCol: String, vecCol: String,
-                             path: String, batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path,
-        owner = s"appendSqIvfStreamBatch:b$batchId") {
-      val dir = AtomicStore.resolve(spark, path)
-      val hwSkip = streamHighwaterOf(spark, dir).filter(_ >= batchId)
-      if (hwSkip.isDefined) {
-        if (hwSkip.get - batchId > 1L) {
-          System.err.println(s"[graft] appendSqIvfStreamBatch: batch " +
-            s"$batchId skipped by stream highwater ${hwSkip.get} at $path " +
-            "— see appendStreamBatch's fresh-checkpoint warning; these " +
-            "batches are NOT being appended. Recorded in _skipped_batches.")
-          recordSkippedBatch(spark, path, batchId, hwSkip.get)
-          true // DROPPED — the caller may choose to fail fast
-        } else false
-      } else {
-        // tombstone collisions compact first, like the batch append
-        val ids = df.select(col(idCol).as("id")).distinct()
-        if (tombstonesOpt(spark, dir)
-              .exists(t => !t.join(ids, Seq("id"), "left_semi").isEmpty))
-          sqCompactIn(spark, dir)
-        val index = openSqIvfIndexIn(spark, dir)
-        sqIvfEncode(df, idCol, vecCol, index.cents)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell")
-          .parquet(s"$dir/codes_stream")
-        writeBatchSentinel(spark, dir, batchId)
-        false
-      }
-    }
+  private def streamHighwaterOf(spark: SparkSession, dir: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_stream_highwater")
+    val fs = AtomicStore.fs(spark, dir)
+    if (!fs.exists(p)) None else Some(AtomicStore.readSmallFile(fs, p).toLong)
   }
 
-  /** Staleness signal for the SQ×IVF store: the stream extension's share
-    * of the index (`streamed / fitted` row counts). The SQ fit has no
-    * per-cell codebooks to drift, but streamed vectors are still binned
-    * by centroids fit on the OLD distribution — past a deployment's
-    * tolerance the coarse balance degrades and a refit re-fits the cells
-    * over the full current corpus. Parquet row counts come from footer
-    * metadata; the probe is a metadata round-trip, not a scan.
-    */
   /** Fragmentation signal of a stream-maintained store: the number of
     * first-level `batch_id=…` partition directories in the `codes_stream`
     * extension (one survives per un-folded micro-batch; the per-cell
@@ -1919,159 +1886,9 @@ object Similarity {
   def streamExtensionDirCount(spark: SparkSession, path: String): Int = {
     val dir = AtomicStore.resolve(spark, path)
     val p = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = AtomicStore.fs(spark, dir)
     if (!fs.exists(p)) 0 else fs.listStatus(p).count(_.isDirectory)
   }
-
-  def sqIvfStreamGrowth(spark: SparkSession, path: String): Double = {
-    val dir = AtomicStore.resolve(spark, path)
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    if (!extP.getFileSystem(spark.sessionState.newHadoopConf()).exists(extP)) 0.0
-    else {
-      val base = spark.read.parquet(s"$dir/codes")
-      val streamed = readStreamExt(spark, extP.toString, base.schema).count()
-      streamed.toDouble / math.max(base.count(), 1L)
-    }
-  }
-
-  /** Growth-triggered SQ×IVF refit — the [[refitIvfPqIndex]] arc on the
-    * int8 store: when the stream extension's share reaches `threshold`,
-    * refit from the CURRENT corpus `df` with the persisted meta params
-    * (bit-identical to a fresh fit on today's corpus with the same seed,
-    * and the fresh generation starts with no extension). Returns whether
-    * a refit happened.
-    */
-  def refitSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                      path: String, threshold: Double = 0.5,
-                      streamHighwater: Option[Long] = None): Boolean = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path, owner = "refitSqIvfIndex") {
-      if (sqIvfStreamGrowth(spark, path) < threshold) false
-      else {
-        val meta = spark.read
-          .parquet(s"${AtomicStore.resolve(spark, path)}/meta").head()
-        writeSqIvfIndex(df, idCol, vecCol, path,
-          dim = meta.getAs[Int]("dim"),
-          nlist = meta.getAs[Int]("nlist"),
-          seed = meta.getAs[Long]("seed"),
-          iters = meta.getAs[Int]("iters"),
-          streamHighwater = streamHighwater)
-        true
-      }
-    }
-  }
-
-  /** Per-JVM cache of opened SQ×IVF models (centroids + codes schema) —
-    * same serve-many rationale as [[indexModelCache]], and keyed by the
-    * immutable generation directory for the same staleness-proof reason.
-    */
-  private val sqIvfModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Seq[Double]], Int,
-      org.apache.spark.sql.types.StructType)]
-
-  def invalidateSqIvfModel(path: String): Unit = {
-    sqIvfModelCache.keys
-      .filter(k => k == path || k.startsWith(path + "/"))
-      .foreach(sqIvfModelCache.remove)
-  }
-
-  /** Open a persisted SQ×IVF index: the centroid table collects to the
-    * driver (nlist rows) and is cached per JVM; the codes table stays a
-    * lazy partition-pruned DataFrame.
-    */
-  def openSqIvfIndex(spark: SparkSession, path: String): SqIvfIndex =
-    openSqIvfIndexIn(spark, AtomicStore.resolveCached(spark, path))
-
-  private def openSqIvfIndexIn(spark: SparkSession, dir: String): SqIvfIndex = {
-    val (cents, dim, codesSchema) = sqIvfModelCache.getOrElseUpdate(dir, {
-      val meta = spark.read.parquet(s"$dir/meta").head()
-      val cs = spark.read.parquet(s"$dir/centroids")
-        .orderBy("cell").collect()
-        .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
-      (cs, meta.getAs[Int]("dim"), spark.read.parquet(s"$dir/codes").schema)
-    })
-    val base = spark.read.schema(codesSchema).parquet(s"$dir/codes")
-    // stream-grown extension ([[appendSqIvfStreamBatch]]): same (id, c8,
-    // cell) rows, additionally partitioned by batch_id for idempotent
-    // replay — union preserves cell partition pruning on both sides
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val codes0 =
-      if (extP.getFileSystem(spark.sessionState.newHadoopConf()).exists(extP))
-        base.unionByName(readStreamExt(spark, extP.toString, base.schema)
-          .select(base.columns.toIndexedSeq.map(col): _*))
-      else base
-    // live view: tombstoned ids ([[deleteFromSqIvfIndex]]) excluded, the
-    // same anti-join mask as [[liveCodes]] on the IVF-PQ store
-    val codes = tombstonesOpt(spark, dir)
-      .map(t => codes0.join(t, Seq("id"), "left_anti")).getOrElse(codes0)
-    SqIvfIndex(cents, dim, codes)
-  }
-
-  /** [[compactIvfPqStreamExtension]] on the SQ×IVF store — same fold,
-    * simpler tables (no codebooks, no cellstats): tombstones fold first
-    * ([[sqCompactIn]]), meta and centroids copy verbatim, base ∪
-    * extension rewrites cell-partitioned in a fresh generation whose
-    * stream highwater rises to the highest folded batch id. Returns
-    * false when there is no extension to fold.
-    */
-  def compactSqIvfStreamExtension(spark: SparkSession, path: String): Boolean =
-    AtomicStore.withMutationLease(spark, path,
-      owner = "compactSqIvfStreamExtension") {
-      compactSqIvfStreamExtensionIn(spark, path)
-    }
-
-  private def compactSqIvfStreamExtensionIn(spark: SparkSession,
-                                            path: String): Boolean = {
-    val dir = AtomicStore.resolve(spark, path)
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val extFs = extP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!extFs.exists(extP)) return false
-    sqCompactIn(spark, dir) // fold tombstones into BOTH tables first
-    val base = spark.read.parquet(s"$dir/codes")
-    val extRows = readStreamExt(spark, extP.toString, base.schema)
-    if (extRows.isEmpty) { extFs.delete(extP, true); return false }
-    val maxBatch = extRows
-      .agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    // completion boundary — see [[compactIvfPqStreamExtensionIn]]: only
-    // sentineled (job-committed) batches fold and raise the highwater;
-    // a mid-write kill's partial rows are carried for the replay to
-    // rewrite, and a pre-sentinel extension folds whole
-    val maxComplete =
-      sentineledBatches(spark, extP).fold(maxBatch)(_.foldLeft(-1L)(math.max))
-    val hw = math.max(streamHighwaterOf(spark, dir).getOrElse(-1L), maxComplete)
-    val foldable =
-      extRows.where(col("batch_id").cast("long") <= lit(maxComplete))
-    val carry =
-      extRows.where(col("batch_id").cast("long") > lit(maxComplete))
-    val merged = base.unionByName(
-      foldable.select(base.columns.toIndexedSeq.map(col): _*))
-    val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("sqivf:meta")
-    Seq("meta", "centroids").foreach { t =>
-      spark.read.parquet(s"$dir/$t").write.mode("overwrite").parquet(s"$gdir/$t")
-    }
-    AtomicStore.failpoint("sqivf:codes")
-    merged.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    if (maxComplete < maxBatch) {
-      carry.write.mode("overwrite").partitionBy("batch_id", "cell")
-        .parquet(s"$gdir/codes_stream")
-      extFs.create(new org.apache.hadoop.fs.Path(
-        s"$gdir/codes_stream/_sentinels_enabled"), true).close()
-    }
-    writeStreamHighwater(spark, gdir, Some(hw))
-    AtomicStore.commit(spark, path, gen)
-    invalidateSqIvfModel(path)
-    true
-  }
-
-  /** Answer a query batch from a persisted SQ×IVF index — no coarse
-    * fit, no corpus re-encode: probe-side kernel + cell equi-join
-    * against the stored codes + integer-dot ranking. Bit-identical to
-    * the direct [[sqIvfTopK]] with the same parameters.
-    */
-  def sqIvfServeIndex(index: SqIvfIndex, queries: DataFrame, idCol: String,
-                      vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
-    sqIvfServe(index.codes, queries, idCol, vecCol, k, index.cents, nprobe)
 
   /** ANN top-k via LSH: bucket on signature bands, rank within buckets.
     * Recall < 1 by construction; `bands` trades recall vs. bucket size.

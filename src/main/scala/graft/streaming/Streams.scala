@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.TimeFns
 import graft.model.SeriesSpec
+import graft.sim.Similarity
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -288,6 +289,26 @@ object Streams {
       foldMaxExtDirs: Int = DefaultFoldMaxExtDirs,
       failOnSkippedBatch: Boolean = false
   ): org.apache.spark.sql.streaming.StreamingQuery =
+    annStoreStream(stream, indexPath, checkpointDir, "annIndexStream",
+      foldEveryBatches, foldMaxExtDirs, failOnSkippedBatch)(
+      Similarity.appendStreamBatch(_, idCol, vecCol, indexPath, _),
+      (s, batchId) => Similarity.refitIvfPqIndex(corpus(s), idCol, vecCol,
+        indexPath, driftThreshold, streamHighwater = Some(batchId)),
+      Similarity.compactIvfPqStreamExtension(_, indexPath))
+
+  /** The ONE stream driver behind [[annIndexStream]] and
+    * [[sqIvfIndexStream]]: per micro-batch, under the store's mutation
+    * lease, `append` → fail fast on a dropped batch if asked → `refit`
+    * when stale → `fold` when fragmented and not just refit.
+    */
+  private def annStoreStream(
+      stream: DataFrame, indexPath: String, checkpointDir: String,
+      name: String, foldEveryBatches: Int, foldMaxExtDirs: Int,
+      failOnSkippedBatch: Boolean)(
+      append: (DataFrame, Long) => Boolean,
+      refit: (SparkSession, Long) => Boolean,
+      fold: SparkSession => Boolean
+  ): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -299,9 +320,8 @@ object Streams {
         // write/checkpoint window (re-entrant — the inner mutation
         // calls re-use this hold)
         graft.util.AtomicStore.withMutationLease(s, indexPath,
-            owner = s"annIndexStream:b$batchId") {
-          val dropped = graft.sim.Similarity.appendStreamBatch(
-            batch.toDF(), idCol, vecCol, indexPath, batchId)
+            owner = s"$name:b$batchId") {
+          val dropped = append(batch.toDF(), batchId)
           // opt-in fail-fast on the fresh-checkpoint highwater gap: the
           // drop is always recorded machine-readably (_skipped_batches);
           // with this flag the stream additionally TERMINATES instead of
@@ -309,10 +329,15 @@ object Streams {
           // owners who prefer a dead stream to quiet data loss. Keyed to
           // THIS call's outcome, not the persistent ledger, so an old
           // incarnation's record can never kill a later healthy stream.
-          failFastOnSkip(indexPath, batchId, dropped && failOnSkippedBatch)
-          val refitted = graft.sim.Similarity.refitIvfPqIndex(
-            corpus(s), idCol, vecCol, indexPath, driftThreshold,
-            streamHighwater = Some(batchId))
+          if (dropped && failOnSkippedBatch)
+            throw new IllegalStateException(
+              s"stream batch $batchId was DROPPED by the index's stream " +
+                s"highwater at $indexPath — the stream restarted with a fresh " +
+                "checkpoint against an existing index (see _skipped_batches). " +
+                "failOnSkippedBatch is set: terminating instead of silently " +
+                "losing data. Keep the original checkpoint, point at a new " +
+                "index, or refit.")
+          val refitted = refit(s, batchId)
           // self-maintaining layout, ON BY DEFAULT and keyed to OBSERVED
           // fragmentation (the extension's partition-dir count — a
           // metadata probe), not a blind batch counter: a drift refit
@@ -323,9 +348,12 @@ object Streams {
           // replay because the fold raises the highwater atomically
           // with its generation. `foldEveryBatches` remains as an
           // optional fixed-cadence override.
-          if (!refitted && shouldFold(s, indexPath, batchId,
-              foldEveryBatches, foldMaxExtDirs))
-            graft.sim.Similarity.compactIvfPqStreamExtension(s, indexPath)
+          val foldDue =
+            (foldEveryBatches > 0 &&
+              batchId % foldEveryBatches == foldEveryBatches - 1L) ||
+            (foldMaxExtDirs > 0 &&
+              Similarity.streamExtensionDirCount(s, indexPath) >= foldMaxExtDirs)
+          if (!refitted && foldDue) fold(s)
         }
         ()
       }
@@ -337,37 +365,10 @@ object Streams {
     */
   val DefaultFoldMaxExtDirs: Int = 64
 
-  private def shouldFold(s: SparkSession, indexPath: String, batchId: Long,
-                         foldEveryBatches: Int, foldMaxExtDirs: Int): Boolean =
-    (foldEveryBatches > 0 &&
-      batchId % foldEveryBatches == foldEveryBatches - 1L) ||
-    (foldMaxExtDirs > 0 &&
-      graft.sim.Similarity.streamExtensionDirCount(s, indexPath)
-        >= foldMaxExtDirs)
-
-  private def failFastOnSkip(indexPath: String,
-                             batchId: Long, fire: Boolean): Unit =
-    if (fire)
-      throw new IllegalStateException(
-        s"stream batch $batchId was DROPPED by the index's stream " +
-          s"highwater at $indexPath — the stream restarted with a fresh " +
-          "checkpoint against an existing index (see _skipped_batches). " +
-          "failOnSkippedBatch is set: terminating instead of silently " +
-          "losing data. Keep the original checkpoint, point at a new " +
-          "index, or refit.")
-
-  /** Stream-maintained SQ×IVF index — [[annIndexStream]]'s exact
-    * lifecycle on the int8 store: append each micro-batch to the
-    * `codes_stream` extension with the stored centroids
-    * ([[graft.sim.Similarity.appendSqIvfStreamBatch]] — batch-id
-    * partition overwrite, replay-idempotent), then refit from the
-    * source-of-truth corpus when the extension's share of the index
-    * passes `growthThreshold` ([[graft.sim.Similarity.refitSqIvfIndex]] —
-    * the refit generation carries the folded batch id as its stream
-    * highwater, atomically, so a post-refit replay is absorbed). Same
-    * exactly-once construction as [[annIndexStream]]; serving
-    * ([[graft.sim.Similarity.openSqIvfIndex]]) reads base ∪ extension at
-    * any point.
+  /** Stream-maintained SQ×IVF index — [[annIndexStream]] on the int8
+    * store, with the same exactly-once construction: the refit trigger
+    * is the extension's share of the index passing `growthThreshold`
+    * ([[graft.sim.Similarity.refitSqIvfIndex]]).
     */
   def sqIvfIndexStream(
       stream: DataFrame,
@@ -381,30 +382,12 @@ object Streams {
       foldMaxExtDirs: Int = DefaultFoldMaxExtDirs,
       failOnSkippedBatch: Boolean = false
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        // lease held for the whole batch — see annIndexStream
-        graft.util.AtomicStore.withMutationLease(s, indexPath,
-            owner = s"sqIvfIndexStream:b$batchId") {
-          val dropped = graft.sim.Similarity.appendSqIvfStreamBatch(
-            batch.toDF(), idCol, vecCol, indexPath, batchId)
-          // see annIndexStream's failFastOnSkip note
-          failFastOnSkip(indexPath, batchId, dropped && failOnSkippedBatch)
-          val refitted = graft.sim.Similarity.refitSqIvfIndex(
-            corpus(s), idCol, vecCol, indexPath, growthThreshold,
-            streamHighwater = Some(batchId))
-          // see annIndexStream: default-on fragmentation-keyed fold when
-          // growth did not already refit this batch
-          if (!refitted && shouldFold(s, indexPath, batchId,
-              foldEveryBatches, foldMaxExtDirs))
-            graft.sim.Similarity.compactSqIvfStreamExtension(s, indexPath)
-        }
-        ()
-      }
-      .start()
+    annStoreStream(stream, indexPath, checkpointDir, "sqIvfIndexStream",
+      foldEveryBatches, foldMaxExtDirs, failOnSkippedBatch)(
+      Similarity.appendSqIvfStreamBatch(_, idCol, vecCol, indexPath, _),
+      (s, batchId) => Similarity.refitSqIvfIndex(corpus(s), idCol, vecCol,
+        indexPath, growthThreshold, streamHighwater = Some(batchId)),
+      Similarity.compactSqIvfStreamExtension(_, indexPath))
 
   /** Open a parquet directory as a stream with an explicit schema — the
     * local test harness for the streaming paths.

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-atomic publish protocol for the persisted index stores
   * (`sim/Similarity` IVF-PQ + SQ×IVF, `dedup/DedupIndex`).
@@ -144,7 +144,8 @@ object AtomicStore {
     */
   @volatile private[graft] var failpoint: String => Unit = _ => ()
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
+  /** A store path's FileSystem, from the SESSION's Hadoop conf. */
+  private[graft] def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Whether `dir` holds at least one COMMITTED data file (a plain file
@@ -162,6 +163,33 @@ object AtomicStore {
         val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
       })
+
+  /** Tombstones table of one generation directory, deduplicated, if any
+    * delete has happened in it, else None — shared by every store. A
+    * data-file probe, not bare exists: a delete killed mid-write leaves
+    * only `_temporary/`, which would fail schema inference and brick every
+    * later open/serve/compact on the store.
+    */
+  private[graft] def tombstonesOpt(spark: SparkSession,
+                                   dir: String): Option[DataFrame] = {
+    val p = new Path(s"$dir/tombstones")
+    if (hasDataFile(fs(spark, dir), p)) Some(spark.read.parquet(p.toString).distinct())
+    else None
+  }
+
+  /** (Over)write a small marker/ledger file with `text` as UTF-8. */
+  private[graft] def writeSmallFile(f: FileSystem, p: Path, text: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A small marker/ledger file's content as trimmed UTF-8 text. */
+  private[graft] def readSmallFile(f: FileSystem, p: Path): String = {
+    val buf = new Array[Byte](f.getFileStatus(p).getLen.toInt)
+    val in = f.open(p)
+    try in.readFully(0, buf) finally in.close()
+    new String(buf, "UTF-8").trim
+  }
 
   /** The largest committed generation id, if any commit marker exists. */
   def currentGen(spark: SparkSession, path: String): Option[Long] =

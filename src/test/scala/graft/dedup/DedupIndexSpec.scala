@@ -451,4 +451,53 @@ class DedupIndexSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"))
   }
+
+  test("store probes resolve their FileSystem from the SESSION's Hadoop " +
+    "conf (session-scoped fs options reach the dedup store)") {
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", classOf[RecordingLocalFs].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    RecordingLocalFs.calls.clear()
+    val path = tmpDir() + "/idx_sessionfs"
+    def docs(rows: (Long, String)*) =
+      s.createDataFrame(rows).toDF("doc_id", "text")
+    DedupIndex.write(docs(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten eleven twelve")),
+      "doc_id", "text", path)
+    DedupIndex.delete(docs((2L, "")).select("doc_id"), "doc_id", path)
+    val gen = graft.util.AtomicStore.resolve(s, path)
+    val hits = DedupIndex.query(docs(
+      (11L, "alpha beta gamma delta epsilon zeta eta theta iota NOPE"),
+      (12L, "one two three four five six seven eight nine ten eleven NOPE")),
+      "doc_id", "text", path, 0.4)
+      .select("query_id", "index_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(hits == Set((11L, 1L)))
+    DedupIndex.compact(s, path)
+    val calls = RecordingLocalFs.calls.toArray.map(_.toString).toSet
+    // probes only the dedup store itself makes: Spark's own reads never
+    // size a directory or look for the folded-tags ledger, so these two
+    // cannot reach the session fs through Spark's reads
+    val missing = Seq(s"getContentSummary $gen/bands",
+      s"exists $gen/_folded_tags").filterNot(calls.contains)
+    assert(missing.isEmpty, "probes that bypassed the session fs")
+  }
+}
+
+/** LocalFileSystem that records its `exists` and `getContentSummary`
+  * probes as "op path".
+  */
+class RecordingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  private def rec(op: String, p: Path): Unit =
+    RecordingLocalFs.calls.add(s"$op ${p.toUri.getPath}")
+  override def exists(p: Path): Boolean = { rec("exists", p); super.exists(p) }
+  override def getContentSummary(p: Path) = {
+    rec("getContentSummary", p); super.getContentSummary(p)
+  }
+}
+
+object RecordingLocalFs {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

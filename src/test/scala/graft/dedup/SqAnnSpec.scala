@@ -127,7 +127,8 @@ class SqAnnSpec extends SparkSpec {
     // vector k-means cells barely correlate with cosine neighborhoods on
     // isotropic noise, so this is a sanity floor, not a quality claim
     // (q_sq_ivf_ann's oracle pins exactness; clustered corpora are where
-    // nprobe/nlist buys recall — SemDeDup's cells in SemProbe)
+    // nprobe/nlist buys recall — SemDeDup's cells, SCALE.md "SemDeDup /
+    // served-index steady-state cost")
     val top5 = brute.toSeq.groupBy(_._1._1).flatMap { case (_, xs) =>
       xs.sortBy { case ((_, id), d) => (-d, id) }.take(5).map(_._1)
     }.toSet

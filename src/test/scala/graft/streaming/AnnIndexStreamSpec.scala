@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.sim.Similarity
+import graft.sim.{AnnStores, Similarity}
 import graft.util.AtomicStore
 import org.apache.spark.sql.functions._
 
@@ -133,35 +133,66 @@ class AnnIndexStreamSpec extends SparkSpec {
   }
 
   test("compacting away an ENTIRE stream batch leaves a readable store (no schema-inference brick)") {
-    val d = tmpDir() + "/alldead"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding", d, batchId = 0L)
-    // tombstone EVERY streamed id, compact via the semi-join fallback leg
-    // (threshold forced to 1 so the bounded-predicate path is exercised)
-    Similarity.deleteFromIvfPqIndex(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50)
-        .select(col("vec_id")), "vec_id", d)
-    val saved = Similarity.CompactPredicateMaxTerms
-    Similarity.CompactPredicateMaxTerms = 1
-    try Similarity.compactIvfPqIndex(spark, d)
-    finally Similarity.CompactPredicateMaxTerms = saved
-    // every codes_stream partition died: the store must still OPEN and
-    // serve (explicit-schema extension read — a data-free directory is
-    // an empty frame, not an AnalysisException)
-    val idx = Similarity.openIvfPqIndex(spark.newSession(), d)
-    assert(idx.codes.count() == 40)
-    assert(Similarity.ivfPqServe(idx, emb.where(col("vec_id") < 5),
-      "vec_id", "embedding", k = 3, nprobe = 4).count() > 0)
-    // the growth/fold paths are equally unbricked: folding a data-free
-    // extension is a no-op that removes the empty directory
-    assert(!Similarity.compactIvfPqStreamExtension(spark, d))
-    val gdir = AtomicStore.resolve(spark, d)
-    assert(!new java.io.File(s"$gdir/codes_stream").exists(),
-      "the fold removes a data-free extension directory")
-    assert(Similarity.openIvfPqIndex(spark.newSession(), d).codes.count() == 40)
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/alldead"
+      s.write(emb.where(col("vec_id") < 40), d, None)
+      s.appendStream(emb.where(col("vec_id") >= 40 && col("vec_id") < 50), d, 0L)
+      // tombstone EVERY streamed id, compact via the semi-join fallback leg
+      // (threshold forced to 1 so the bounded-predicate path is exercised)
+      s.delete(emb.where(col("vec_id") >= 40 && col("vec_id") < 50)
+        .select(col("vec_id")), d)
+      val saved = Similarity.CompactPredicateMaxTerms
+      Similarity.CompactPredicateMaxTerms = 1
+      try s.compact(spark, d)
+      finally Similarity.CompactPredicateMaxTerms = saved
+      // every codes_stream partition died: the store must still OPEN and
+      // serve (explicit-schema extension read — a data-free directory is
+      // an empty frame, not an AnalysisException)
+      assert(s.codes(spark.newSession(), d).count() == 40)
+      assert(s.serve(spark.newSession(), d, emb.where(col("vec_id") < 5))
+        .count() > 0)
+      // the growth/fold paths are equally unbricked: folding a data-free
+      // extension is a no-op that removes the empty directory
+      assert(!s.fold(spark, d))
+      val gdir = AtomicStore.resolve(spark, d)
+      assert(!new java.io.File(s"$gdir/codes_stream").exists(),
+        "the fold removes a data-free extension directory")
+      assert(s.codes(spark.newSession(), d).count() == 40)
+    }}
+  }
+
+  test("a cached open runs no Spark job: the model comes from the " +
+    "per-JVM cache and the live codes view (base ∪ extension) stays lazy") {
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/cachedopen"
+      s.write(emb.where(col("vec_id") < 40), d, None)
+      s.appendStream(emb.where(col("vec_id") >= 40 && col("vec_id") < 50), d, 0L)
+      val sess = spark.newSession()
+      s.codes(sess, d) // first open: loads the model into the cache
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.add(Option(js.properties)
+            .map(_.getProperty("spark.job.description", "")).getOrElse("")); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val codes = s.codes(sess, d)
+        // events arrive in order: once this marker job is seen, every job
+        // the open started has been seen too
+        spark.sparkContext.setJobDescription("marker")
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 10000000000L
+        while (!jobs.contains("marker") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(jobs.contains("marker"), "listener never saw the marker job")
+        assert(jobs.size == 1, s"the cached open ran jobs: $jobs")
+        assert(codes.count() == 50)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }}
   }
 
   test("stream-extension compaction: folded layout serves identically, raises the highwater, survives a kill") {
@@ -362,187 +393,157 @@ class AnnIndexStreamSpec extends SparkSpec {
 
   test("fresh-checkpoint highwater gap is DETECTED machine-readably, not " +
     "just logged (skipped-batch ledger)") {
-    val d = tmpDir() + "/annskip"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    // stream refit folds batch 5 → highwater 5
-    assert(Similarity.refitIvfPqIndex(emb.where(col("vec_id") < 50),
-      "vec_id", "embedding", d, threshold = 0.0, streamHighwater = Some(5L)))
-    assert(Similarity.skippedStreamBatches(spark, d).isEmpty)
-    // a legitimate at-least-once replay of the folded batch (id at the
-    // highwater): absorbed silently, NOT a data-loss record
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding", d, batchId = 5L)
-    assert(Similarity.skippedStreamBatches(spark, d).isEmpty,
-      "gap <= 1 is replay absorption, not data loss")
-    // the stream restarts with a FRESH checkpoint: ids reset to 0 — the
-    // batch is dropped AND the drop is queryable
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 50 && col("vec_id") < 60),
-      "vec_id", "embedding", d, batchId = 0L)
-    val skipped = Similarity.skippedStreamBatches(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(skipped == Set((0L, 5L)), s"got $skipped")
-    // the record is idempotent under the replay of the skip itself, and
-    // survives a refit (it lives at the store root, not the generation)
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 50 && col("vec_id") < 60),
-      "vec_id", "embedding", d, batchId = 0L)
-    assert(Similarity.refitIvfPqIndex(emb.where(col("vec_id") < 50),
-      "vec_id", "embedding", d, threshold = 0.0, streamHighwater = Some(6L)))
-    assert(Similarity.skippedStreamBatches(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      == Set((0L, 5L)))
-    // the SQ twin records through the same ledger
-    val d2 = tmpDir() + "/sqskip"
-    Similarity.writeSqIvfIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d2, dim = 64, nlist = 8,
-      streamHighwater = Some(7L))
-    Similarity.appendSqIvfStreamBatch(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding", d2, batchId = 1L)
-    assert(Similarity.skippedStreamBatches(spark, d2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      == Set((1L, 7L)))
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/annskip"
+      s.write(emb.where(col("vec_id") < 40), d, None)
+      // stream refit folds batch 5 → highwater 5
+      assert(s.refit(emb.where(col("vec_id") < 50), d, 0.0, Some(5L)))
+      assert(Similarity.skippedStreamBatches(spark, d).isEmpty)
+      // a legitimate at-least-once replay of the folded batch (id at the
+      // highwater): absorbed silently, NOT a data-loss record
+      assert(!s.appendStream(
+        emb.where(col("vec_id") >= 40 && col("vec_id") < 50), d, 5L))
+      assert(Similarity.skippedStreamBatches(spark, d).isEmpty,
+        "gap <= 1 is replay absorption, not data loss")
+      // the stream restarts with a FRESH checkpoint: ids reset to 0 — the
+      // batch is dropped AND the drop is queryable
+      assert(s.appendStream(
+        emb.where(col("vec_id") >= 50 && col("vec_id") < 60), d, 0L))
+      val skipped = Similarity.skippedStreamBatches(spark, d)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(skipped == Set((0L, 5L)), s"got $skipped")
+      // the record is idempotent under the replay of the skip itself, and
+      // survives a refit (it lives at the store root, not the generation)
+      s.appendStream(emb.where(col("vec_id") >= 50 && col("vec_id") < 60), d, 0L)
+      assert(s.refit(emb.where(col("vec_id") < 50), d, 0.0, Some(6L)))
+      assert(Similarity.skippedStreamBatches(spark, d)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        == Set((0L, 5L)))
+    }}
   }
 
   test("the skip ledger is BOUNDED: past the cap, drops collapse into " +
     "one overwritten overflow record instead of unbounded marker files") {
-    val d = tmpDir() + "/skipcap"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8,
-      codebookSize = 16, streamHighwater = Some(1000L))
-    // pre-fill the ledger past the cap (a misconfigured fresh-checkpoint
-    // stream that dropped for hours)
-    val ledger = new java.io.File(s"$d/_skipped_batches")
-    ledger.mkdirs()
-    (100 to 700).foreach { i =>
-      new java.io.File(ledger, s"b${i}_hw1000").createNewFile()
-    }
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding", d, batchId = 0L)
-    assert(!new java.io.File(ledger, "b0_hw1000").exists(),
-      "past the cap no new per-batch marker may be created")
-    assert(new java.io.File(ledger, "overflow").exists())
-    // a later drop OVERWRITES the overflow record (latest drop wins)
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding", d, batchId = 3L)
-    val rows = Similarity.skippedStreamBatches(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows.contains((3L, 1000L)), "overflow surfaces the latest drop")
-    assert(!rows.contains((0L, 1000L)), "superseded overflow is replaced")
-    assert(rows.size == 602, "601 itemized markers + the overflow row")
-    // raw java.io count, excluding the local ChecksumFileSystem's .crc
-    // sidecars that fs.listStatus hides
-    assert(ledger.listFiles().count(!_.getName.endsWith(".crc")) == 602,
-      "file count stays bounded while drops continue")
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/skipcap"
+      s.write(emb.where(col("vec_id") < 40), d, Some(1000L))
+      // pre-fill the ledger past the cap (a misconfigured fresh-checkpoint
+      // stream that dropped for hours)
+      val ledger = new java.io.File(s"$d/_skipped_batches")
+      ledger.mkdirs()
+      (100 to 700).foreach { i =>
+        new java.io.File(ledger, s"b${i}_hw1000").createNewFile()
+      }
+      s.appendStream(emb.where(col("vec_id") >= 40 && col("vec_id") < 50), d, 0L)
+      assert(!new java.io.File(ledger, "b0_hw1000").exists(),
+        "past the cap no new per-batch marker may be created")
+      assert(new java.io.File(ledger, "overflow").exists())
+      // a later drop OVERWRITES the overflow record (latest drop wins)
+      s.appendStream(emb.where(col("vec_id") >= 40 && col("vec_id") < 50), d, 3L)
+      val rows = Similarity.skippedStreamBatches(spark, d)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(rows.contains((3L, 1000L)), "overflow surfaces the latest drop")
+      assert(!rows.contains((0L, 1000L)), "superseded overflow is replaced")
+      assert(rows.size == 602, "601 itemized markers + the overflow row")
+      // raw java.io count, excluding the local ChecksumFileSystem's .crc
+      // sidecars that fs.listStatus hides
+      assert(ledger.listFiles().count(!_.getName.endsWith(".crc")) == 602,
+        "file count stays bounded while drops continue")
+    }}
   }
 
   test("failOnSkippedBatch: a fresh-checkpoint restart TERMINATES the " +
     "stream instead of silently dropping batches (opt-in)") {
-    val d = tmpDir() + "/annfailskip"
-    // a store whose fit already folded batch 9 — a NEW stream against it
-    // restarts ids at 0, the exact silent-data-loss trap
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8,
-      codebookSize = 16, streamHighwater = Some(9L))
-    val src = graft.util.Tmp.root("ann_failskip_src")
-    val ckpt = graft.util.Tmp.root("ann_failskip_ckpt").toString
-    val q = Streams.annIndexStream(
-      spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", "1")
-        .parquet(src.toString),
-      "vec_id", "embedding", d, ckpt,
-      corpus = _ => emb, driftThreshold = Double.MaxValue,
-      failOnSkippedBatch = true)
-    try {
-      stage(src, 0)
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      def chain(t: Throwable): Seq[String] =
-        if (t == null) Nil else t.getMessage +: chain(t.getCause)
-      assert(chain(e).exists(m => m != null && m.contains("DROPPED")),
-        s"must terminate on the drop, got: ${chain(e)}")
-    } finally q.stop()
-    // the drop is still in the machine-readable ledger
-    assert(Similarity.skippedStreamBatches(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      == Set((0L, 9L)))
-    // …and the lease was released despite the batch failing
-    assert(!new java.io.File(s"$d/_mutation_lease").exists())
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/annfailskip"
+      // a store whose fit already folded batch 9 — a NEW stream against it
+      // restarts ids at 0, the exact silent-data-loss trap
+      s.write(emb.where(col("vec_id") < 40), d, Some(9L))
+      val src = graft.util.Tmp.root("ann_failskip_src")
+      val ckpt = graft.util.Tmp.root("ann_failskip_ckpt").toString
+      val q = s.stream(
+        spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", "1")
+          .parquet(src.toString), d, ckpt, true)
+      try {
+        stage(src, 0)
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        def chain(t: Throwable): Seq[String] =
+          if (t == null) Nil else t.getMessage +: chain(t.getCause)
+        assert(chain(e).exists(m => m != null && m.contains("DROPPED")),
+          s"must terminate on the drop, got: ${chain(e)}")
+      } finally q.stop()
+      // the drop is still in the machine-readable ledger
+      assert(Similarity.skippedStreamBatches(spark, d)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        == Set((0L, 9L)))
+      // …and the lease was released despite the batch failing
+      assert(!new java.io.File(s"$d/_mutation_lease").exists())
+    }}
   }
 
   test("a delete racing a live stream batch REJECTS on the mutation lease; " +
     "between batches it succeeds (single-writer contract, enforced)") {
-    val d = tmpDir() + "/annlease"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    // simulate the stream batch's hold: the drivers wrap each batch in
-    // withMutationLease (same code path), paused mid-batch here
-    val inBatch = new java.util.concurrent.CountDownLatch(1)
-    val finishBatch = new java.util.concurrent.CountDownLatch(1)
-    val holder = new Thread(() =>
-      graft.util.AtomicStore.withMutationLease(spark, d,
-          owner = "annIndexStream:b7") {
-        inBatch.countDown()
-        finishBatch.await()
-      })
-    holder.start()
-    inBatch.await()
-    try {
-      val e = intercept[IllegalStateException] {
-        Similarity.deleteFromIvfPqIndex(
-          emb.where(col("vec_id") === 3).select(col("vec_id")), "vec_id", d)
-      }
-      assert(e.getMessage.contains("annIndexStream:b7"),
-        s"rejection must name the holder, got: ${e.getMessage}")
-      // compactions and folds reject the same way
-      intercept[IllegalStateException] { Similarity.compactIvfPqIndex(spark, d) }
-      intercept[IllegalStateException] {
-        Similarity.compactIvfPqStreamExtension(spark, d)
-      }
-    } finally { finishBatch.countDown(); holder.join() }
-    // the batch released the lease: the takedown proceeds normally
-    Similarity.deleteFromIvfPqIndex(
-      emb.where(col("vec_id") === 3).select(col("vec_id")), "vec_id", d)
-    assert(Similarity.openIvfPqIndex(spark.newSession(), d)
-      .codes.where(col("cid") === 3L).count() == 0)
-    assert(!new java.io.File(s"$d/_mutation_lease").exists(),
-      "mutations release the lease on completion")
-    // a crashed holder's stale lease is broken after the grace
-    val leaseFile = new java.io.File(s"$d/_mutation_lease")
-    java.nio.file.Files.writeString(leaseFile.toPath, "crashed:deadbeef")
-    assert(leaseFile.setLastModified(
-      System.currentTimeMillis() - 2 * graft.util.AtomicStore.DefaultLeaseGraceMs))
-    Similarity.deleteFromIvfPqIndex(
-      emb.where(col("vec_id") === 4).select(col("vec_id")), "vec_id", d)
-    assert(!leaseFile.exists(), "stale lease broken and released")
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/annlease"
+      s.write(emb.where(col("vec_id") < 40), d, None)
+      // simulate the stream batch's hold: the drivers wrap each batch in
+      // withMutationLease (same code path), paused mid-batch here
+      val inBatch = new java.util.concurrent.CountDownLatch(1)
+      val finishBatch = new java.util.concurrent.CountDownLatch(1)
+      val holder = new Thread(() =>
+        graft.util.AtomicStore.withMutationLease(spark, d,
+            owner = "annIndexStream:b7") {
+          inBatch.countDown()
+          finishBatch.await()
+        })
+      holder.start()
+      inBatch.await()
+      try {
+        val e = intercept[IllegalStateException] {
+          s.delete(emb.where(col("vec_id") === 3).select(col("vec_id")), d)
+        }
+        assert(e.getMessage.contains("annIndexStream:b7"),
+          s"rejection must name the holder, got: ${e.getMessage}")
+        // compactions and folds reject the same way
+        intercept[IllegalStateException] { s.compact(spark, d) }
+        intercept[IllegalStateException] { s.fold(spark, d) }
+      } finally { finishBatch.countDown(); holder.join() }
+      // the batch released the lease: the takedown proceeds normally
+      s.delete(emb.where(col("vec_id") === 3).select(col("vec_id")), d)
+      assert(s.codes(spark.newSession(), d)
+        .where(col(s.idCol) === 3L).count() == 0)
+      assert(!new java.io.File(s"$d/_mutation_lease").exists(),
+        "mutations release the lease on completion")
+      // a crashed holder's stale lease is broken after the grace
+      val leaseFile = new java.io.File(s"$d/_mutation_lease")
+      java.nio.file.Files.writeString(leaseFile.toPath, "crashed:deadbeef")
+      assert(leaseFile.setLastModified(
+        System.currentTimeMillis() - 2 * graft.util.AtomicStore.DefaultLeaseGraceMs))
+      s.delete(emb.where(col("vec_id") === 4).select(col("vec_id")), d)
+      assert(!leaseFile.exists(), "stale lease broken and released")
+    }}
   }
 
   test("a crashed stream refit's highwater is not inherited by a later non-stream fit") {
-    val d = tmpDir() + "/hwinherit"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    // stream refit that crashes at the commit point, AFTER its highwater
-    // file landed in the (now abandoned) generation directory
-    AtomicStore.failpoint =
-      l => if (l == "commit") throw new RuntimeException("killed at commit")
-    try intercept[RuntimeException] {
-      Similarity.refitIvfPqIndex(emb.where(col("vec_id") < 50),
-        "vec_id", "embedding", d, threshold = 0.0, streamHighwater = Some(9L))
-    } finally AtomicStore.failpoint = _ => ()
-    // a plain (non-stream) refit reuses the abandoned generation id — it
-    // must scrub the stale watermark, or every future stream append with
-    // batchId <= 9 would be silently skipped
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 50),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 50 && col("vec_id") < 60),
-      "vec_id", "embedding", d, batchId = 0L)
-    assert(Similarity.openIvfPqIndex(spark.newSession(), d).codes.count() == 60,
-      "append after the clean fit must not be skipped by a stale highwater")
+    AnnStores.both.foreach { s => withClue(s"[${s.name}] ") {
+      val d = tmpDir() + "/hwinherit"
+      s.write(emb.where(col("vec_id") < 40), d, None)
+      // stream refit that crashes at the commit point, AFTER its highwater
+      // file landed in the (now abandoned) generation directory
+      AtomicStore.failpoint =
+        l => if (l == "commit") throw new RuntimeException("killed at commit")
+      try intercept[RuntimeException] {
+        s.refit(emb.where(col("vec_id") < 50), d, 0.0, Some(9L))
+      } finally AtomicStore.failpoint = _ => ()
+      // a plain (non-stream) refit reuses the abandoned generation id — it
+      // must scrub the stale watermark, or every future stream append with
+      // batchId <= 9 would be silently skipped
+      s.write(emb.where(col("vec_id") < 50), d, None)
+      s.appendStream(emb.where(col("vec_id") >= 50 && col("vec_id") < 60), d, 0L)
+      assert(s.codes(spark.newSession(), d).count() == 60,
+        "append after the clean fit must not be skipped by a stale highwater")
+    }}
   }
 }
